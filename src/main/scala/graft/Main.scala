@@ -783,8 +783,7 @@ object Main {
       // the drift diagnostic that says when a recluster is due
       val mf = graft.util.IndexManifest.read(spark, idx)
       println(s"$idx: ${graft.util.IndexManifest.describe(mf)}")
-      if (mf.kind == graft.util.IndexManifest.KindIvfFlat ||
-          mf.kind == graft.util.IndexManifest.KindIvfPq) {
+      if (streaming.StagedKinds.of(mf).ivf.nonEmpty) {
         val s = ml.Similarity.listSkew(spark, idx)
         println(f"  lists: ${s.nonEmptyLists}/${s.centroids} non-empty, " +
           f"${s.nVectors} vectors, largest ${s.maxList}, " +
@@ -804,14 +803,10 @@ object Main {
       // generation commit: concurrent probes keep working through the
       // flip.
       val mf = graft.util.IndexManifest.read(spark, idx)
-      mf.kind match {
-        case graft.util.IndexManifest.KindIvfFlat =>
-          ml.Similarity.reclusterIvfFlat(spark, idx, iters = int("iters", 3))
-        case graft.util.IndexManifest.KindIvfPq =>
-          ml.Similarity.reclusterIvfPq(spark, idx, iters = int("iters", 3))
-        case other => throw new IllegalArgumentException(
-          s"recluster supports the IVF kinds (got '$other')")
-      }
+      val ivf = streaming.StagedKinds.of(mf).ivf.getOrElse(
+        throw new IllegalArgumentException(
+          s"recluster supports the IVF kinds (got '${mf.kind}')"))
+      ivf.recluster(spark, idx, int("iters", 3))
       println(s"reclustered $idx")
       return 0
     }
@@ -832,23 +827,7 @@ object Main {
       // index dir): consolidate append-accumulated files back to one
       // per partition, refresh the manifest count the appends left
       // stale. Probe/query results are unchanged by construction.
-      val mf = graft.util.IndexManifest.read(spark, idx)
-      mf.kind match {
-        case graft.util.IndexManifest.KindGramCensus =>
-          text.Substrings.compactCensus(spark, idx)
-        case graft.util.IndexManifest.KindIvfPq =>
-          ml.Similarity.compactIvfPq(spark, idx)
-        case graft.util.IndexManifest.KindIvfFlat =>
-          ml.Similarity.compactIvfFlat(spark, idx)
-        case graft.util.IndexManifest.KindBm25 =>
-          text.Retrieval.compactBm25(spark, idx)
-        case graft.util.IndexManifest.KindMinhashBands =>
-          text.Dedup.compactBandIndex(spark, idx)
-        case graft.util.IndexManifest.KindFingerprints =>
-          text.Dedup.compactFingerprints(spark, idx)
-        case other => throw new IllegalArgumentException(
-          s"no compaction for index kind '$other'")
-      }
+      streaming.StagedKinds.at(spark, idx).compact(spark, idx)
       println(s"compacted $idx")
       return 0
     }
@@ -864,9 +843,8 @@ object Main {
       // otherwise; "text"/"embedding" name the value column), optional
       // "assumeNewIds", "compactEvery", "maxFilesPerTrigger" (1).
       val feed = req("feed"); val ckpt = req("checkpoint")
-      val mf = graft.util.IndexManifest.read(spark, idx)
-      val isVec = mf.kind == graft.util.IndexManifest.KindIvfPq ||
-        mf.kind == graft.util.IndexManifest.KindIvfFlat
+      // the IVF kinds are the vector kinds
+      val isVec = streaming.StagedKinds.at(spark, idx).ivf.nonEmpty
       val id = if (n.has("id")) n.get("id").asText()
         else if (isVec) "vec_id" else "doc_id"
       val value =

@@ -124,8 +124,9 @@ object Migrate {
       val src = spec.filter(_.hasFilter)
         .map(sp => source.read(ns).filter(sp.predicate))
         .getOrElse(source.read(ns))
-      val counts = Compare.diffBucketed(src, sink.read(to), key, buckets)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val diff = Compare.diffBucketed(src, sink.read(to), key, buckets)
+      val counts = try diff.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        finally graft.util.LocalCkpt.release(diff)
       ns -> Compare.CompareSummary(
         matched = counts.getOrElse("match", 0L),
         mismatched = counts.getOrElse("mismatch", 0L),

@@ -31,10 +31,9 @@ object Similarity {
   /** floor(x*Scale) per coordinate — apply ONCE per vector (before any
     * join) so pairwise scoring is a bare integer zip-multiply instead of
     * re-quantizing both operands for every pair. Native codegen
-    * expression; [[quantizeHof]] is the declarative reference it is
-    * pinned against (higher-order functions evaluate INTERPRETED, per
-    * element — the dominant cost of the similarity queries before the
-    * native path). */
+    * expression; the specs pin it against a declarative reference
+    * (higher-order functions evaluate INTERPRETED, per element — the
+    * dominant cost of the similarity queries before the native path). */
   def quantize(a: Column): Column =
     ExprBridge.column(graft.functions.QuantizeVec(ExprBridge.expression(a), Scale))
 
@@ -44,14 +43,6 @@ object Similarity {
   def dotQ(qa: Column, qb: Column): Column =
     ExprBridge.column(graft.functions.DotQ(
       ExprBridge.expression(qa), ExprBridge.expression(qb)))
-
-  /** Declarative reference formulation of [[quantize]] (spec-only). */
-  private[graft] def quantizeHof(a: Column): Column =
-    transform(a, x => floor(x.cast("double") * Scale).cast("long"))
-
-  /** Declarative reference formulation of [[dotQ]] (spec-only). */
-  private[graft] def dotQHof(qa: Column, qb: Column): Column =
-    aggregate(zip_with(qa, qb, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
   /** Exact integer dot product of two float vectors, quantized. */
   def quantizedDot(a: Column, b: Column): Column = dotQ(quantize(a), quantize(b))
@@ -119,19 +110,6 @@ object Similarity {
     ExprBridge.column(graft.functions.LshSignBits(
       graft.functions.QuantizeVec(ExprBridge.expression(emb), Scale),
       signMatrix(bits, dims)))
-
-  /** Declarative reference formulation of [[lshBucket]] (spec-only). */
-  private[graft] def lshBucketHof(emb: Column, bits: Int, dims: Int): Column = {
-    val q = quantizeHof(emb)
-    val signs = signMatrix(bits, dims)
-    (0 until bits).map { h =>
-      val s = typedLit(signs(h))
-      val dot = aggregate(
-        zip_with(q, sequence(lit(1), size(emb)), (xq, i) => element_at(s, i) * xq),
-        lit(0L), (acc, v) => acc + v)
-      when(dot > 0, lit(1L << h)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 
   /** IVF-style bucketed top-k: score only pairs sharing `bucketCol`
     * (e.g. a cluster label from any upstream clustering, or
@@ -684,7 +662,7 @@ object Similarity {
     * GENERATION pair (`codes.gN`, `meta.gN`) once [[reclusterIvfPq]]
     * has run. One manifest read resolves a geometry-consistent pair;
     * the recluster flips both with a single atomic manifest rewrite. */
-  private def ivfPqNames(mf: graft.util.IndexManifest): (String, String) =
+  private[graft] def ivfPqNames(mf: graft.util.IndexManifest): (String, String) =
     mf.params.get("gen") match {
       case Some(g) => (s"codes.g$g", s"meta.g$g")
       case None => ("codes", "meta")
@@ -927,7 +905,7 @@ object Similarity {
     * and a recluster flips both with a single atomic manifest rewrite
     * (readers see the whole old index or the whole new one, never a
     * mixed geometry and never a missing layout). */
-  private def ivfFlatNames(mf: graft.util.IndexManifest): (String, String) =
+  private[graft] def ivfFlatNames(mf: graft.util.IndexManifest): (String, String) =
     mf.params.get("gen") match {
       case Some(g) => (s"vecs.g$g", s"meta.g$g")
       case None => ("vecs", "meta")
@@ -938,7 +916,7 @@ object Similarity {
     * every probe/append resolves through this exactly once, so a
     * concurrent [[reclusterIvfFlat]] flip can never hand it old
     * centroids with new vectors (or vice versa). */
-  private final case class IvfFlatHandle(mf: graft.util.IndexManifest,
+  private[graft] final case class IvfFlatHandle(mf: graft.util.IndexManifest,
       vecsPath: String, metaPath: String, cents: IndexedSeq[Seq[Long]])
 
   /** The flat meta layout's schema — FIXED by stageIvfFlat/
@@ -947,7 +925,7 @@ object Similarity {
   private val IvfFlatMetaSchema = org.apache.spark.sql.types.StructType
     .fromDDL("idx INT, vec ARRAY<BIGINT>")
 
-  private def openIvfFlat(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def openIvfFlat(spark: org.apache.spark.sql.SparkSession,
       dir: String): IvfFlatHandle = {
     val mf = graft.util.IndexManifest.validate(spark, dir,
       graft.util.IndexManifest.KindIvfFlat)
@@ -1256,20 +1234,16 @@ object Similarity {
       dir: String): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val mf = graft.util.IndexManifest.read(spark, dir)
-    val (base, live) = mf.kind match {
-      case graft.util.IndexManifest.KindIvfFlat =>
-        val (v, m) = ivfFlatNames(mf); ("vecs", Set(v, m))
-      case graft.util.IndexManifest.KindIvfPq =>
-        val (c, m) = ivfPqNames(mf); ("codes", Set(c, m))
-      case other => throw new IllegalArgumentException(
-        s"reapIvfGrace: '$other' has no generation layout (IVF kinds only)")
-    }
+    val ivf = graft.streaming.StagedKinds.of(mf).ivf.getOrElse(
+      throw new IllegalArgumentException(s"reapIvfGrace: '${mf.kind}' " +
+        "has no generation layout (IVF kinds only)"))
+    val (data, meta) = ivf.live(mf)
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.listStatus(new Path(dir)).map(_.getPath)
       .filter { p =>
         val n = p.getName
-        n.matches(s"($base|meta)(\\.g\\d+)?") && !live(n.toString)
+        n.matches(s"(${ivf.base}|meta)(\\.g\\d+)?") && n != data && n != meta
       }
       .map { p => fs.delete(p, true): Unit; p.getName }
       .toSeq.sorted
@@ -1286,12 +1260,10 @@ object Similarity {
   def listSkew(spark: org.apache.spark.sql.SparkSession,
       dir: String): ListSkew = {
     val mf = graft.util.IndexManifest.read(spark, dir)
-    val layout = mf.kind match {
-      case graft.util.IndexManifest.KindIvfFlat => ivfFlatNames(mf)._1
-      case graft.util.IndexManifest.KindIvfPq => ivfPqNames(mf)._1
-      case other => throw new IllegalArgumentException(
-        s"listSkew: '$other' is not an IVF-partitioned kind")
-    }
+    val layout = graft.streaming.StagedKinds.of(mf).ivf.getOrElse(
+      throw new IllegalArgumentException(
+        s"listSkew: '${mf.kind}' is not an IVF-partitioned kind"))
+      .live(mf)._1
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("list",
         org.apache.spark.sql.types.IntegerType)))
@@ -1473,7 +1445,7 @@ object Similarity {
   /** The rows of `batch` that carry an admission identity: non-null
     * embeddings whose QUANTIZED norm is positive (a zero vector has no
     * direction, so no cosine — see [[vecNewStaged]]'s null contract). */
-  private def vecAdmissible(batch: DataFrame, embCol: String): DataFrame =
+  private[graft] def vecAdmissible(batch: DataFrame, embCol: String): DataFrame =
     batch.filter(col(embCol).isNotNull && quantizedNormSq(col(embCol)) > 0)
 
   /** The probe-frame names reserved for the admission join's internals
@@ -1482,11 +1454,11 @@ object Similarity {
   private val VecProbeReserved =
     Set("__q", "__n2", "__list", "__dot", "__ref_q", "__ref_n2")
 
-  /** The SHARED probe projection of [[vecNewStaged]] and the spec
-    * helper below — one builder, so the plan-audit pin can never drift
+  /** The SHARED probe projection of [[vecNewStaged]] and the spec-side
+    * probe helper — one builder, so the plan-audit pin can never drift
     * from the production probe: quantize, norm, one probe-list row per
     * (vector, probed list). LAZY; callers choose materialization. */
-  private def vecProbeFrame(nn: DataFrame, idCol: String, embCol: String,
+  private[graft] def vecProbeFrame(nn: DataFrame, idCol: String, embCol: String,
       cents: IndexedSeq[Seq[Long]], nprobe: Int): DataFrame = {
     require(!VecProbeReserved.contains(idCol),
       s"idCol '$idCol' collides with a reserved probe-internal name " +
@@ -1495,20 +1467,5 @@ object Similarity {
       .withColumn("__n2", dotQ(col("__q"), col("__q")))
       .select(col(idCol), col("__q"), col("__n2"),
         explode(ivfProbes(col("__q"), cents, nprobe)).as("__list"))
-  }
-
-  /** [[vecRejectedIds]] built from a raw batch — the spec-facing probe
-    * frame (same [[vecProbeFrame]] projection as [[vecNewStaged]],
-    * left LAZY end-to-end so nothing is pinned to executor storage;
-    * the list-collect re-runs the narrow projection, which a spec can
-    * afford). */
-  private[graft] def vecRejectedFrame(batch: DataFrame, idCol: String,
-      embCol: String, dir: String, minCosPermille: Int = 900,
-      nprobe: Int = 4): DataFrame = {
-    val h = openIvfFlat(batch.sparkSession, dir)
-    val nn = vecAdmissible(batch, embCol)
-    vecRejectedIds(vecProbeFrame(nn, idCol, embCol, h.cents, nprobe),
-      idCol, nn.schema(idCol), h.vecsPath, minCosPermille,
-      forceBroadcast = true, vecsSchema = h.mf.layoutSchema("vecs"))
   }
 }

@@ -93,14 +93,4 @@ object RangeSplitter {
     * statistics). */
   def repartitionByKeyRange(df: DataFrame, key: String, numTasks: Int): DataFrame =
     df.repartitionByRange(math.max(numTasks, 1), col(key))
-
-  /** Sampled approximate bounds (for feeding an external partitioner):
-    * numSplits-1 interior boundaries via approxQuantile — single pass,
-    * no sort. */
-  def sampledBoundaries(df: DataFrame, key: String, numSplits: Int,
-      relativeError: Double = 0.001): Array[Double] = {
-    require(numSplits > 1, "need at least 2 splits")
-    val probs = (1 until numSplits).map(_.toDouble / numSplits).toArray
-    df.stat.approxQuantile(key, probs, relativeError)
-  }
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * and band signatures are a narrow array-slice projection of that
   * result. The shingle set itself ([[shingles]]) is the shared upstream
   * of candidates AND verification — compute it once, persist, and feed
-  * both stages (the `*FromShingles` variants) instead of re-deriving the
+  * it to [[lshCandidatesFromShingles]] instead of re-deriving the
   * lineage per stage.
   */
 object Dedup {
@@ -40,8 +40,9 @@ object Dedup {
   val MaxShingleWords = 4096
 
   /** Distinct word-n-gram shingle set: (id, s). The shared upstream of
-    * the near-dup pipeline — persist this and pass it to the
-    * `*FromShingles` stages so the tokenize+distinct shuffle runs once. */
+    * the near-dup pipeline — persist this and pass it to
+    * [[lshCandidatesFromShingles]] so the tokenize+distinct shuffle
+    * runs once. */
   def shingles(df: DataFrame, idCol: String, text: Column,
       shingleWords: Int = 3, maxWords: Int = MaxShingleWords): DataFrame =
     // the split word array is BOUND before the n-gram lambda references
@@ -689,16 +690,17 @@ object Dedup {
     val buckets = mf.paramInt("buckets").toLong
     if (!assumeNewIds) {
       // batch-id frame materialized ONCE (it feeds the bucket collect
-      // and the semi-join probe)
+      // and the semi-join probe), released once the guard has run
       val bids = batch.select(col(idCol).as("ref_id")).distinct()
         .localCheckpoint(true)
-      graft.util.StagedIndex.requireNewIds(
+      try graft.util.StagedIndex.requireNewIds(
         bandIndexSeenIds(bids, dir, buckets,
           idsSchema = mf.layoutSchema("ids")),
         "appendBandIndex", dir,
         "a re-appended id double-counts in the maxBucket census and " +
           "silently drops a borderline bucket's candidates.",
         "stageBandIndex")
+      finally graft.util.LocalCkpt.release(bids)
     }
     // ONE signature pass + ONE job feeds both sublayouts, ids moved
     // into place before bands (the fail-closed ordering —
@@ -1387,47 +1389,6 @@ object Dedup {
         .select("id_a", "id_b", "n_inter", "n_union", "jaccard")
         .localCheckpoint(true)
     } finally { release() }
-  }
-
-  /** [[jaccardVerify]] over a precomputed (persisted) shingle set —
-    * share it with [[lshCandidatesFromShingles]] so the full near-dup
-    * pipeline derives the corpus lineage exactly once.
-    *
-    * `pairs` is referenced SEVERAL times by this DAG (the pair list, the
-    * candidate-id pruning, and the intersection join): pass it
-    * materialized — [[lshCandidatesFromShingles]] output already is.
-    * Returns an eagerly materialized result (one row per candidate pair)
-    * and releases its internal pruned-shingle cache before returning —
-    * same rationale as [[lshCandidatesFromShingles]]. */
-  def jaccardVerifyFromShingles(shRaw: DataFrame, pairs: DataFrame,
-      idCol: String): DataFrame = {
-    // prune the shingle set to candidate docs BEFORE any wide join: the
-    // verify stage only touches docs that appear in a pair, so the
-    // shuffled volume drops from |all shingles| to |candidate shingles|
-    // (AQE broadcasts the id list when it is small)
-    val candIds = pairs.select(col("id_a").as("__jid"))
-      .unionByName(pairs.select(col("id_b").as("__jid")))
-      .distinct()
-    val sh = shRaw.select(col(idCol).as("__jid"), col("s"))
-      .join(candIds, Seq("__jid"), "left_semi")
-      .persist()
-    try {
-      sh.count(): Unit // materialize BEFORE the three consuming subtrees
-      val sizes = sh.groupBy("__jid").agg(count(lit(1)).as("n"))
-      val inter = pairs
-        .join(sh.select(col("__jid").as("id_a"), col("s")), Seq("id_a"))
-        .join(sh.select(col("__jid").as("id_b"), col("s")), Seq("id_b", "s"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-      pairs
-        .join(inter, Seq("id_a", "id_b"), "left")
-        .na.fill(0L, Seq("n_inter"))
-        .join(sizes.select(col("__jid").as("id_a"), col("n").as("n_a")), Seq("id_a"))
-        .join(sizes.select(col("__jid").as("id_b"), col("n").as("n_b")), Seq("id_b"))
-        .withColumn("n_union", col("n_a") + col("n_b") - col("n_inter"))
-        .withColumn("jaccard", col("n_inter").cast("double") / col("n_union"))
-        .select("id_a", "id_b", "n_inter", "n_union", "jaccard")
-        .localCheckpoint(true)
-    } finally { sh.unpersist(false); () }
   }
 
   /** Cluster resolution: collapse verified near-dup pairs into connected

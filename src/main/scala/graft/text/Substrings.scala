@@ -377,37 +377,6 @@ object Substrings {
         col("__a").getField("h").as("h"))
   }
 
-  /** Declarative twin of [[winnowRows]] — the bounded
-    * nearest-smaller-rank formulation the DuckDB oracle mirrors
-    * (rank = (h, p); a position is selected iff some full window of G
-    * consecutive positions has it as rank-min; a document shorter than
-    * one window selects its overall rank-min). O(L·G) join rows — the
-    * spec's cross-check, not the scan path. */
-  private[graft] def winnowRowsDeclarative(df: DataFrame, idCol: String,
-      text: Column, k: Int, guarantee: Int, maxChars: Int = 0): DataFrame = {
-    val G = guarantee - k + 1
-    val g = gramRowsDeclarative(df, idCol, text, k, maxChars)
-      .withColumn("__L", count(lit(1)).over(Window.partitionBy(col(idCol))))
-    val a = g.select(col(idCol).as("__id"), col("p").as("__pa"),
-      col("h").as("__ha"), col("__L"))
-    val b = g.select(col(idCol).as("__idb"), col("p").as("__pb"), col("h").as("__hb"))
-    a.join(b,
-        col("__idb") === col("__id") &&
-          col("__pb").between(col("__pa") - (G - 1), col("__pa") + (G - 1)) &&
-          col("__pb") =!= col("__pa") &&
-          (col("__hb") < col("__ha") ||
-            (col("__hb") === col("__ha") && col("__pb") < col("__pa"))),
-        "left")
-      .groupBy(col("__id"), col("__pa"), col("__ha"), col("__L"))
-      .agg(max(when(col("__pb") < col("__pa"), col("__pb"))).as("__qstar"),
-        min(when(col("__pb") > col("__pa"), col("__pb"))).as("__rstar"))
-      .filter(
-        greatest(lit(1), coalesce(col("__qstar"), lit(0)) + 1, col("__pa") - (G - 1))
-          <= least(col("__pa"), greatest(col("__L") - (G - 1), lit(1)),
-            coalesce(col("__rstar"), col("__L") + G) - G))
-      .select(col("__id").as(idCol), col("__pa").as("p"), col("__ha").as("h"))
-  }
-
   /** Anchored duplicated spans (scale path): winnow-selected grams whose
     * hash occurs ≥ 2 times among SELECTED grams corpus-wide, merged per
     * document. Subset of [[dupSpans]]' coverage by construction; any

@@ -139,23 +139,6 @@ object TextFunctions {
     ExprBridge.column(graft.functions.SimHashN(
       ExprBridge.expression(tokens), 64))
 
-  /** Declarative explode×bits formulation of [[simhash]] (spec-only
-    * equivalence twin — and the shape any SQL oracle implements). */
-  private[graft] def simhashExploded(df: DataFrame, idCol: String,
-      text: Column): DataFrame = {
-    val toks = df.select(col(idCol), explode(whitespaceTokens(text)).as("tok"))
-      .withColumn("h4", substring(md5(col("tok")), 1, SimhashBits / 4))
-      .select(col(idCol), col("h4"), explode(sequence(lit(0), lit(SimhashBits - 1))).as("j"))
-      .withColumn("bit", expr(
-        "shiftright(instr('0123456789abcdef', substr(h4, 1 + CAST(floor(j/4) AS INT), 1)) - 1," +
-          " 3 - j % 4) & 1"))
-    toks.groupBy(col(idCol), col("j"))
-      .agg(sum("bit").as("ones"), count(lit(1)).as("n"))
-      .groupBy(col(idCol))
-      .agg(sum(expr("IF(2 * ones > n, shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))"))
-        .cast("long").as("simhash"))
-  }
-
   /** Hamming distance between two packed simhash signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 

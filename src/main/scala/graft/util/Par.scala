@@ -49,15 +49,8 @@ object Par {
     }
   }
 
-  /** Two/three independent VALUE-returning actions (counts, aggregates
+  /** Three independent VALUE-returning actions (counts, aggregates
     * over different frames), overlapped the same way. */
-  def eval2[A, B](fa: () => A, fb: () => B): (A, B) = {
-    var a: Option[A] = None
-    var b: Option[B] = None
-    run(() => a = Some(fa()), () => b = Some(fb()))
-    (a.get, b.get)
-  }
-
   def eval3[A, B, C](fa: () => A, fb: () => B, fc: () => C): (A, B, C) = {
     var a: Option[A] = None
     var b: Option[B] = None

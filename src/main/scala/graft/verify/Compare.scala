@@ -139,8 +139,10 @@ object Compare {
     * source width, so caching it costs far less than the second
     * scan+sha2 pass it replaces). A fully-identical 100 TB pair
     * therefore diffs with two scans and zero wide shuffles. The (tiny)
-    * count result is returned materialized and every internal cache is
-    * released before returning.
+    * count result is returned materialized (a local checkpoint — the
+    * caller releases it with [[graft.util.LocalCkpt.release]] once
+    * consumed) and every internal cache and checkpoint is released
+    * before returning.
     *
     * Output: (status, n) counts, statuses as in [[diff]]. xor-sketch
     * collisions (two different bucket contents with equal xor and count)
@@ -186,10 +188,12 @@ object Compare {
       val skippedMatches = identical
         .agg(coalesce(sum(col("__ln")), lit(0L)).as("n"))
         .select(lit("match").as("status"), col("n"))
-      rowCounts.unionByName(skippedMatches)
-        .groupBy("status").agg(sum("n").as("n"))
-        .filter(col("n") > 0)
-        .localCheckpoint(true)
+      try
+        rowCounts.unionByName(skippedMatches)
+          .groupBy("status").agg(sum("n").as("n"))
+          .filter(col("n") > 0)
+          .localCheckpoint(true)
+      finally graft.util.LocalCkpt.release(sk)
     } finally { s.unpersist(false); t.unpersist(false); () }
   }
 }

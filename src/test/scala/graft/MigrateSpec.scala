@@ -84,6 +84,22 @@ class MigrateSpec extends SparkSpec {
     assert(cmp2("src.region").isEqual)
   }
 
+  test("-compare releases every checkpoint it takes (no persisted RDD left behind)") {
+    val source = new ParquetCatalog(spark, sf0001, "src")
+    val sink = new ParquetCatalog(spark, tmp("graft-cmp-sink"), "src")
+    val cfg = MigratorConfig(command = "all", source = "s", target = "t",
+      includes = Seq(graft.config.IncludeSpec("src.nation")))
+    // a target that differs in one row: the changed-bucket path runs too
+    sink.write("src.nation", source.read("src.nation")
+      .withColumn("n_regionkey", when(col("n_nationkey") === 0,
+        col("n_regionkey") + 1).otherwise(col("n_regionkey"))))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val cmp = Migrate.compare(spark, cfg, source, sink, buckets = 64)
+    assert(cmp("src.nation").mismatched == 1)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted/checkpointed RDDs left by compare: $leaked")
+  }
+
   test("compareChunked over a mixed int/string/oid namespace equals the full diff") {
     import graft.verify.Compare
     // a doc-store namespace whose _id mixes every BSON type class,

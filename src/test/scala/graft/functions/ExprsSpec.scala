@@ -1,8 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.ml.Similarity
-import graft.text.Shingles
+import graft.ml.{Similarity, SimilarityOracles}
+import graft.text.{Shingles, TextOracles}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 
@@ -37,7 +37,7 @@ class ExprsSpec extends SparkSpec {
     .union(Seq((4L, null.asInstanceOf[Array[Float]], Array(1.0f, 2.0f, -3.0f))).toDF("id", "a", "b"))
 
   test("QuantizeVec matches the transform/floor HOF on fixtures") {
-    assertSame(vecs, Similarity.quantize($"a"), Similarity.quantizeHof($"a"))
+    assertSame(vecs, Similarity.quantize($"a"), SimilarityOracles.quantizeHof($"a"))
   }
 
   test("QuantizeVec preserves NULL elements positionally") {
@@ -46,31 +46,31 @@ class ExprsSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("a",
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, true)))))
-    assertSame(withNullElem, Similarity.quantize($"a"), Similarity.quantizeHof($"a"))
+    assertSame(withNullElem, Similarity.quantize($"a"), SimilarityOracles.quantizeHof($"a"))
     val out = withNullElem.select(Similarity.quantize($"a")).head.getSeq[Any](0)
     assert(out(1) == null && out(0) != null)
   }
 
   test("DotQ matches aggregate/zip_with HOF incl. length mismatch -> NULL") {
     val qs = vecs.select($"id", Similarity.quantize($"a").as("qa"), Similarity.quantize($"b").as("qb"))
-    assertSame(qs, Similarity.dotQ($"qa", $"qb"), Similarity.dotQHof($"qa", $"qb"))
+    assertSame(qs, Similarity.dotQ($"qa", $"qb"), SimilarityOracles.dotQHof($"qa", $"qb"))
     // mismatched lengths: zip_with pads with NULL -> product NULL -> sum NULL
     val mm = Seq((Array(1L, 2L, 3L), Array(1L, 2L))).toDF("qa", "qb")
-    assertSame(mm, Similarity.dotQ($"qa", $"qb"), Similarity.dotQHof($"qa", $"qb"))
+    assertSame(mm, Similarity.dotQ($"qa", $"qb"), SimilarityOracles.dotQHof($"qa", $"qb"))
     assert(mm.select(Similarity.dotQ($"qa", $"qb")).head.isNullAt(0))
   }
 
   test("LshSignBits matches the per-bit HOF bucket on real embeddings") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet").select($"embedding")
-    assertSame(emb, Similarity.lshBucket($"embedding", 8, 64), Similarity.lshBucketHof($"embedding", 8, 64))
+    assertSame(emb, Similarity.lshBucket($"embedding", 8, 64), SimilarityOracles.lshBucketHof($"embedding", 8, 64))
   }
 
   test("quantize/dotQ match HOFs on real embeddings") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet").limit(200)
       .select($"embedding".as("a"), $"embedding".as("b"))
-    assertSame(e, Similarity.quantize($"a"), Similarity.quantizeHof($"a"))
+    assertSame(e, Similarity.quantize($"a"), SimilarityOracles.quantizeHof($"a"))
     val q = e.select(Similarity.quantize($"a").as("qa"), Similarity.quantize($"b").as("qb"))
-    assertSame(q, Similarity.dotQ($"qa", $"qb"), Similarity.dotQHof($"qa", $"qb"))
+    assertSame(q, Similarity.dotQ($"qa", $"qb"), SimilarityOracles.dotQHof($"qa", $"qb"))
   }
 
   // ---- text fixtures: short docs, exact-k docs, unicode, empty string
@@ -171,7 +171,7 @@ class ExprsSpec extends SparkSpec {
         (910005L, null.asInstanceOf[String])).toDF("doc_id", "text"))
     val narrow = TextFunctions.simhash(docs, "doc_id", $"text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exploded = TextFunctions.simhashExploded(docs, "doc_id", $"text")
+    val exploded = TextOracles.simhashExploded(docs, "doc_id", $"text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(narrow == exploded && narrow.nonEmpty)
     assert(!narrow.exists(t => t._1 >= 910003L)) // token-less docs drop

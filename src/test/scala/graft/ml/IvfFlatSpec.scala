@@ -76,7 +76,7 @@ class IvfFlatSpec extends SparkSpec {
     // static pruning: the vecs scan carries a partition filter on `list`
     // (pinned on the LAZY rejected frame — vecNewStaged's return is an
     // eagerly checkpointed RDD whose plan no longer shows the scan)
-    val rejected = Similarity.vecRejectedFrame(batch, "vec_id",
+    val rejected = SimilarityOracles.vecRejectedFrame(batch, "vec_id",
       "embedding", dir, minCosPermille = 900, nprobe = 2)
     val plan = rejected.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan

@@ -276,36 +276,84 @@ class DocStreamSpec extends SparkSpec {
     assert(maxFilesPerPartDir(s"$root/bandidxb/ids", "idb=") == 1)
   }
 
-  test("admitNearStream: rejects-sink failure releases the admitted checkpoint (no block leak)") {
-    val root = feedDir()
-    val idx = s"$root/bandidx"
-    graft.text.Dedup.stageBandIndex(
-      Seq((100L, "the quick brown fox jumps over the lazy dog near the river bank today"))
-        .toDF("doc_id", "text"),
-      "doc_id", col("text"), dir = idx, buckets = 4)
-    val df = Seq((1L,
-        "completely different document about spark streaming and parquet file layouts",
-        "crawl-a"))
-      .toDF("doc_id", "text", "src").coalesce(1)
-    df.write.parquet(s"$root/feed")
-    // rejectsPath rooted UNDER a regular file: the audit sink's first
-    // write fails while the overlapped admitted thunk completes its
-    // eager checkpoint — the error path that used to leak one
-    // checkpoint block per failed/replayed micro-batch (the release
-    // finally was only reached when Par.run returned normally)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/blocker"), Array[Byte](1))
+  // The gate skeleton's single release contract, pinned per admission
+  // gate: each entry stages its index and feed under `root` and returns
+  // a starter taking (rejects dir, compactEvery). Every gate audits
+  // rejections and sees at least one reject and one admit, so each
+  // checkpoint its probe takes is live when a sink runs.
+  private val leakGates: Seq[(String,
+      String => (String, Int) => org.apache.spark.sql.streaming.StreamingQuery)] = Seq(
+    "admitStream" -> { root =>
+      graft.text.Dedup.stageFingerprints(
+        Seq((100L, "reference only doc")).toDF("doc_id", "text"),
+        col("text"), s"$root/idx", buckets = 4)
+      val df = Seq((1L, "reference only doc"), (2L, "a fresh crawl document"))
+        .toDF("doc_id", "text").coalesce(1)
+      df.write.parquet(s"$root/feed")
+      (rej, every) => DocStream.admitStream(
+        spark.readStream.schema(df.schema).parquet(s"$root/feed"),
+        "doc_id", "text", s"$root/idx", s"$root/adm", s"$root/ckpt",
+        compactEvery = every, rejectsPath = Some(rej))
+    },
+    "admitNearStream" -> { root =>
+      val ref = "the quick brown fox jumps over the lazy dog near the river bank today"
+      graft.text.Dedup.stageBandIndex(Seq((100L, ref)).toDF("doc_id", "text"),
+        "doc_id", col("text"), dir = s"$root/idx", buckets = 4, storeTexts = true)
+      val df = Seq((1L, ref),
+          (2L, "completely different document about spark streaming and parquet file layouts"))
+        .toDF("doc_id", "text").coalesce(1)
+      df.write.parquet(s"$root/feed")
+      // verify on: the pairs, texts and verified checkpoints are live too
+      (rej, every) => DocStream.admitNearStream(
+        spark.readStream.schema(df.schema).parquet(s"$root/feed"),
+        "doc_id", "text", s"$root/idx", s"$root/adm", s"$root/ckpt",
+        compactEvery = every, verifyJaccard = Some(0.5), rejectsPath = Some(rej))
+    },
+    "admitVecStream" -> { root =>
+      graft.ml.Similarity.stageIvfFlat(
+        Seq((100L, Array(1f, 0f, 0f, 0f)), (101L, Array(0f, 1f, 0f, 0f)))
+          .toDF("vec_id", "embedding"),
+        "vec_id", "embedding", numCentroids = 2, dir = s"$root/idx")
+      val df = Seq((1L, Array(1f, 0f, 0f, 0f)), (2L, Array(0f, 0f, 1f, 0f)))
+        .toDF("vec_id", "embedding").coalesce(1)
+      df.write.parquet(s"$root/feed")
+      (rej, every) => DocStream.admitVecStream(
+        spark.readStream.schema(df.schema).parquet(s"$root/feed"),
+        "vec_id", "embedding", s"$root/idx", s"$root/adm", s"$root/ckpt",
+        compactEvery = every, rejectsPath = Some(rej))
+    })
+
+  private def assertNoLeak(run: => Unit): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val q = DocStream.admitNearStream(
-      spark.readStream.schema(df.schema).parquet(s"$root/feed"),
-      "doc_id", "text", idx, s"$root/adm", s"$root/ckpt",
-      rejectsPath = Some(s"$root/blocker/rej"))
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.awaitTermination()
-    }
+    run
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,
-      s"persistent/checkpoint blocks leaked by the failed batch: $leaked")
+      s"persistent/checkpoint blocks leaked by the drain: $leaked")
+  }
+
+  for ((gate, setup) <- leakGates) {
+    test(s"$gate: rejects-sink failure releases the admitted checkpoint (no block leak)") {
+      val root = feedDir()
+      val start = setup(root)
+      // rejectsPath rooted UNDER a regular file: the audit sink fails
+      // while the out write beside it completes — the batch fails with
+      // every probe checkpoint already materialized
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$root/blocker"), Array[Byte](1))
+      assertNoLeak {
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          start(s"$root/blocker/rej", 0).awaitTermination()
+        }
+      }
+    }
+
+    test(s"$gate: clean drain with compaction releases every checkpoint (no block leak)") {
+      val root = feedDir()
+      val start = setup(root)
+      assertNoLeak(start(s"$root/rej", 1).awaitTermination())
+      assert(spark.read.parquet(s"$root/adm").count() == 1)
+      assert(spark.read.parquet(s"$root/rej").count() == 1)
+    }
   }
 
   test("admitVecStream compactEvery: mid-drain vec compaction, files bounded") {
@@ -550,6 +598,45 @@ class DocStreamSpec extends SparkSpec {
         "doc_id", "text", idx, s"$root/admz", s"$root/ckptz",
         verifyJaccard = Some(0.8), refTexts = Some(refs))
     }
+  }
+
+  test("exact gate into a store-texts verify gate: the exchanged batch verifies without a partitioning clash") {
+    // the state-store exact gate hands admitNearStream a HASH-exchanged
+    // micro-batch; the verify stage unions it with the bucket-pruned
+    // index text fetch. Both are shuffle-partitioned, so a union that
+    // claims its children's output partitioning would feed a join a
+    // partitioning its RDD does not have (a zip of unequal partition
+    // counts) — the shape the lifecycle benchmark's admit pass runs
+    val root = feedDir()
+    val idx = s"$root/bandidx"
+    val r = new scala.util.Random(7919)
+    val vocab = (0 until 2000).map(_ => (0 until 3 + r.nextInt(6))
+      .map(_ => ('a' + r.nextInt(26)).toChar).mkString).distinct
+    def text(): String = Seq.fill(40)(vocab(r.nextInt(vocab.size))).mkString(" ")
+    val refs = (1 to 300).map(i => i.toLong -> text())
+    graft.text.Dedup.stageBandIndex(refs.toDF("doc_id", "text"), "doc_id",
+      col("text"), dir = idx, storeTexts = true)
+    def edit(t: String): String = {
+      val w = t.split(' '); w(w.length / 2) = "zzzedit"; w.mkString(" ")
+    }
+    val fresh = (1001L to 1060L).map(_ -> text())
+    val copies = (1061L to 1080L).zip(refs.take(20).map(_._2))
+    val edits = (1081L to 1100L).zip(refs.slice(20, 40).map(p => edit(p._2)))
+    val feed = (fresh ++ copies ++ edits).zipWithIndex.map { case ((id, t), k) =>
+      (id, t, new java.sql.Timestamp(1700000000000L + k * 1000L)) }
+    feed.toDF("doc_id", "text", "t").coalesce(1).write.parquet(s"$root/feed")
+    DocStream.admitNearStream(
+        DocStream.dedupExactStream(
+          spark.readStream.schema(spark.read.parquet(s"$root/feed").schema)
+            .option("maxFilesPerTrigger", 1).parquet(s"$root/feed"),
+          col("text"), "t", "2 hours"),
+        "doc_id", "text", idx, s"$root/adm", s"$root/ckpt",
+        verifyJaccard = Some(0.5), rejectsPath = Some(s"$root/rej"))
+      .awaitTermination()
+    assert(spark.read.parquet(s"$root/adm").select("doc_id").as[Long]
+      .collect().toSet == fresh.map(_._1).toSet)
+    assert(spark.read.parquet(s"$root/rej").select("doc_id").as[Long]
+      .collect().toSet == (copies ++ edits).map(_._1).toSet)
   }
 
   test("exact gate keeps first arrival, drops the cross-batch content dup") {

@@ -82,7 +82,7 @@ class SubstringsSpec extends SparkSpec {
   test("winnowRows native deque == declarative nearest-smaller-rank twin") {
     val df = spark.read.parquet(s"$sf0001/documents.parquet").limit(80)
     val a = Substrings.winnowRows(df, "doc_id", col("text"), k = 12, guarantee = 30)
-    val b = Substrings.winnowRowsDeclarative(df, "doc_id", col("text"), 12, 30)
+    val b = TextOracles.winnowRowsDeclarative(df, "doc_id", col("text"), 12, 30)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(a.count() > 0)
   }
