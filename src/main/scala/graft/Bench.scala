@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line with per-query wall-clock at the
   * SPARK_GRAFT_SF_DIR scale factor.
   *
@@ -82,15 +80,7 @@ object Bench {
       s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     def selected = if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => only(k) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     // untimed full warm-up at the smallest scale factor (fall back to the
     // bench dir if the sibling fixture is absent)
     val warm = {

@@ -1,12 +1,11 @@
 package graft
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import graft.config.MigratorConfig
+import graft.config.{CliConfig, MigratorConfig}
 import graft.monitor.StatusServer
 import graft.sim.Simgen
 import graft.sources.{Catalog, MultiDbParquetCatalog, ParquetCatalog}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
 
@@ -176,16 +175,12 @@ object Main {
     * one change-log batch per second into `<uri>`, M oplogs each —
     * [[Simgen.liveFeed]]'s rate-paced churn. */
   private def sim(spark: SparkSession, json: String): Int = {
-    val n = new ObjectMapper().readTree(json)
-    require(n != null && n.isObject, "sim config must be a JSON object")
-    val namespaces =
-      if (n.has("namespaces")) n.get("namespaces").elements().asScala.map(_.asText()).toSeq
-      else Nil
+    val n = CliConfig.parse("sim", json)
+    val namespaces = strings(n, "namespaces", Nil)
     require(namespaces.nonEmpty, "sim config needs at least one namespace")
-    val seconds = if (n.has("seconds_to_run")) n.get("seconds_to_run").asInt() else 300
-    val perSecond = if (n.has("oplogs_per_second")) n.get("oplogs_per_second").asInt()
-      else Simgen.DefaultNumOplogs
-    val dir = if (n.has("uri")) n.get("uri").asText() else ""
+    val seconds = n.int("seconds_to_run", 300)
+    val perSecond = n.int("oplogs_per_second", Simgen.DefaultNumOplogs)
+    val dir = n.str("uri", "")
     require(dir.nonEmpty, "sim config needs a uri (change-log directory)")
     val emitted = namespaces.map(ns =>
       Simgen.liveFeed(spark, new Path(dir, ns).toString, ns,
@@ -256,34 +251,23 @@ object Main {
   private def curate(spark: SparkSession, json: String): Int = {
     import org.apache.spark.sql.functions._
     import graft.text.{Lines, Mixing, Sampling, TextFunctions}
-    val n = new ObjectMapper().readTree(json)
-    require(n != null && n.isObject, "curate config must be a JSON object")
-    def req(f: String): String = {
-      require(n.has(f) && n.get(f).asText().nonEmpty, s"curate config needs $f")
-      n.get(f).asText()
-    }
-    val dir = req("source"); val ns = req("namespace"); val out = req("out")
-    val idCol = if (n.has("id")) n.get("id").asText() else "doc_id"
-    val textName = if (n.has("text")) n.get("text").asText() else "text"
-    val minQuality = if (n.has("minQuality")) n.get("minQuality").asInt() else 3
-    val langs = if (n.has("langs"))
-      n.get("langs").elements().asScala.map(_.asText()).toSeq else Seq("en")
-    val salt = if (n.has("salt")) n.get("salt").asText() else "42"
-    val weights = if (n.has("weights"))
-      n.get("weights").fields().asScala.toSeq
-        .map(e => e.getKey -> e.getValue.asDouble())
-      else Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-    val lineGate = if (n.has("lineGate")) Some(n.get("lineGate").asInt()) else None
-    val minEntropy =
-      if (n.has("minEntropy")) Some(n.get("minEntropy").asDouble()) else None
-    val substrCut = if (n.has("substrCut")) Some(n.get("substrCut").asInt()) else None
-    val substrMode = if (n.has("substrMode")) n.get("substrMode").asText() else "exact"
+    val n = CliConfig.parse("curate", json)
+    val dir = n.req("source"); val ns = n.req("namespace"); val out = n.req("out")
+    val idCol = n.str("id", "doc_id")
+    val textName = n.str("text", "text")
+    val minQuality = n.int("minQuality", 3)
+    val langs = strings(n, "langs", Seq("en"))
+    val salt = n.str("salt", "42")
+    val weights = n.opt("weights").fold(Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))(
+      _.fields().asScala.toSeq.map(e => e.getKey -> e.getValue.asDouble()))
+    val lineGate = n.opt("lineGate").map(_.asInt())
+    val minEntropy = n.opt("minEntropy").map(_.asDouble())
+    val substrCut = n.opt("substrCut").map(_.asInt())
+    val substrMode = n.str("substrMode", "exact")
     require(Set("exact", "anchored")(substrMode),
       s"substrMode must be exact|anchored, got $substrMode")
-    val substrGuarantee = if (n.has("substrGuarantee"))
-      n.get("substrGuarantee").asInt() else substrCut.getOrElse(40) + 24
-    val substrIndex =
-      if (n.has("substrIndex")) Some(n.get("substrIndex").asText()) else None
+    val substrGuarantee = n.int("substrGuarantee", substrCut.getOrElse(40) + 24)
+    val substrIndex = n.opt("substrIndex").map(_.asText())
     require(substrIndex.isEmpty || substrCut.isEmpty,
       "substrCut and substrIndex are mutually exclusive: the index " +
         "carries its own gram width and mode")
@@ -300,8 +284,7 @@ object Main {
     require(!n.has("substrGuarantee") || substrMode == "anchored",
       "substrGuarantee only parameterizes the anchored census — " +
         "set substrMode to 'anchored' or drop substrGuarantee")
-    val substrHash = if (n.has("substrHash")) n.get("substrHash").asText()
-      else graft.text.Substrings.HashMd5
+    val substrHash = n.str("substrHash", graft.text.Substrings.HashMd5)
     require(Set(graft.text.Substrings.HashMd5,
       graft.text.Substrings.HashXxh64)(substrHash),
       s"substrHash must be md5|xxh64, got $substrHash")
@@ -309,18 +292,17 @@ object Main {
       "substrHash keys the substrCut census — without substrCut it " +
         "would be silently ignored (substrIndex takes the hash from " +
         "its own manifest)")
-    val budgets = if (n.has("budgets"))
-      Some(n.get("budgets").fields().asScala.toSeq
-        .map(e => e.getKey -> e.getValue.asLong()))
-      else None
-    val audit = if (n.has("audit")) Some(n.get("audit").asText()) else None
+    val budgets = n.opt("budgets").map(_.fields().asScala.toSeq
+      .map(e => e.getKey -> e.getValue.asLong()))
+    val audit = n.opt("audit").map(_.asText())
 
     val cat = catalogAt(spark, dir,
       MigratorConfig(command = "data", source = dir, target = dir))
 
     if (n.has("stream")) {
-      val st = n.get("stream")
-      require(st != null && st.isObject, "curate 'stream' must be a JSON object")
+      val stNode = n.opt("stream").get
+      require(stNode.isObject, "curate 'stream' must be a JSON object")
+      val st = new CliConfig("curate stream", stNode)
       // batch-only knobs refused loudly: each needs a corpus-wide pass
       // the on-arrival surface deliberately doesn't have
       Seq("substrCut" -> substrCut.nonEmpty, "budgets" -> budgets.nonEmpty,
@@ -329,19 +311,11 @@ object Main {
         require(!set, s"'$k' is a batch-only curate knob (it needs a " +
           "corpus-wide census/selection pass) — drop it or run without 'stream'")
       }
-      def sreq(f: String): String = {
-        require(st.has(f) && st.get(f).asText().nonEmpty,
-          s"curate stream config needs $f")
-        st.get(f).asText()
-      }
-      val ckpt = sreq("checkpoint")
-      val timeCol = sreq("timeCol")
-      val watermark =
-        if (st.has("watermark")) st.get("watermark").asText() else "1 hour"
-      val appendAfterCut =
-        st.has("appendAfterCut") && st.get("appendAfterCut").asBoolean()
-      val compactEvery =
-        if (st.has("compactEvery")) st.get("compactEvery").asInt() else 0
+      val ckpt = st.req("checkpoint")
+      val timeCol = st.req("timeCol")
+      val watermark = st.str("watermark", "1 hour")
+      val appendAfterCut = st.bool("appendAfterCut")
+      val compactEvery = st.int("compactEvery", 0)
       require(substrIndex.nonEmpty || (!appendAfterCut && compactEvery == 0),
         "appendAfterCut/compactEvery compose with the substrIndex cut — " +
           "without an index there is nothing to append into")
@@ -362,9 +336,9 @@ object Main {
         s"stream timeCol '$timeCol' is not a column of $ns " +
           s"(present: ${schema.fieldNames.mkString(", ")})")
       val reader = spark.readStream.schema(schema)
-      val src = (if (st.has("maxFilesPerTrigger"))
-          reader.option("maxFilesPerTrigger", st.get("maxFilesPerTrigger").asInt())
-        else reader).parquet(feedPath)
+      val src = st.opt("maxFilesPerTrigger")
+        .fold(reader)(m => reader.option("maxFilesPerTrigger", m.asInt()))
+        .parquet(feedPath)
       val query = substrIndex match {
         case Some(ix) =>
           graft.streaming.DocStream.curateStreamAgainstIndex(src, idCol,
@@ -575,22 +549,14 @@ object Main {
     * lands at `<out>/_layout_report` and prints as a summary line. */
   private def optimize(spark: SparkSession, json: String): Int = {
     import org.apache.spark.sql.functions._
-    val n = new ObjectMapper().readTree(json)
-    require(n != null && n.isObject, "optimize config must be a JSON object")
-    def req(f: String): String = {
-      require(n.has(f) && n.get(f).asText().nonEmpty, s"optimize config needs $f")
-      n.get(f).asText()
-    }
-    val dir = req("source"); val ns = req("namespace"); val out = req("out")
-    val dims = if (n.has("dims"))
-      n.get("dims").elements().asScala.map(_.asText()).toSeq else Seq()
+    val n = CliConfig.parse("optimize", json)
+    val dir = n.req("source"); val ns = n.req("namespace"); val out = n.req("out")
+    val dims = strings(n, "dims", Nil)
     require(dims.size == 2, "optimize config needs dims: [colA, colB]")
-    val bits = if (n.has("bits")) n.get("bits").asInt() else 16
-    val target = if (n.has("targetBytes")) n.get("targetBytes").asLong()
-      else 16L * 1024 * 1024
-    val shardShift = if (n.has("shardShift")) n.get("shardShift").asInt()
-      else math.max(0, 2 * bits - 10)
-    val sizeCol = if (n.has("sizeCol")) Some(n.get("sizeCol").asText()) else None
+    val bits = n.int("bits", 16)
+    val target = n.long("targetBytes", 16L * 1024 * 1024)
+    val shardShift = n.int("shardShift", math.max(0, 2 * bits - 10))
+    val sizeCol = n.opt("sizeCol").map(_.asText())
 
     val cat = catalogAt(spark, dir,
       MigratorConfig(command = "data", source = dir, target = dir))
@@ -639,23 +605,12 @@ object Main {
     * plus optional `"columns": [...]` (default: all profilable
     * columns) and `"out": <dir>` (default: print). */
   private def profile(spark: SparkSession, json: String): Int = {
-    val n = new ObjectMapper().readTree(json)
-    require(n != null && n.isObject, "profile config must be a JSON object")
-    def req(f: String): String = {
-      require(n.has(f) && n.get(f).asText().nonEmpty, s"profile config needs $f")
-      n.get(f).asText()
-    }
-    val dir = req("source"); val ns = req("namespace")
-    val cols = if (n.has("columns"))
-      n.get("columns").elements().asScala.map(_.asText()).toSeq else Seq()
+    val n = CliConfig.parse("profile", json)
+    val dir = n.req("source"); val ns = n.req("namespace")
+    val cols = strings(n, "columns", Nil)
     val cat = catalogAt(spark, dir,
       MigratorConfig(command = "data", source = dir, target = dir))
-    val report = ops.Profile.report(cat.read(ns), cols).orderBy("column")
-    if (n.has("out")) {
-      val out = n.get("out").asText()
-      report.write.mode("overwrite").parquet(out)
-      println(s"wrote $out")
-    } else report.show(truncate = false)
+    writeOrShow(n, ops.Profile.report(cat.read(ns), cols).orderBy("column"))
     0
   }
 
@@ -669,20 +624,13 @@ object Main {
     * `"maxBasket"` (1000), `"out"` (parquet dir: rules + census +
     * triangles sub-tables; default: show). */
   private def mine(spark: SparkSession, json: String): Int = {
-    val n = new ObjectMapper().readTree(json)
-    require(n != null && n.isObject, "mine config must be a JSON object")
-    def req(f: String): String = {
-      require(n.has(f) && n.get(f).asText().nonEmpty, s"mine config needs $f")
-      n.get(f).asText()
-    }
-    def long(f: String, dflt: Long): Long =
-      if (n.has(f)) n.get(f).asLong() else dflt
-    val dir = req("source"); val ns = req("namespace")
-    val basket = org.apache.spark.sql.functions.col(req("basket"))
-    val item = org.apache.spark.sql.functions.col(req("item"))
-    val minItem = long("minItemSupport", 2L)
-    val minPair = long("minPairSupport", 2L)
-    val maxBasketL = long("maxBasket", 1000L)
+    val n = CliConfig.parse("mine", json)
+    val dir = n.req("source"); val ns = n.req("namespace")
+    val basket = org.apache.spark.sql.functions.col(n.req("basket"))
+    val item = org.apache.spark.sql.functions.col(n.req("item"))
+    val minItem = n.long("minItemSupport", 2L)
+    val minPair = n.long("minPairSupport", 2L)
+    val maxBasketL = n.long("maxBasket", 1000L)
     require(maxBasketL > 0 && maxBasketL <= Int.MaxValue,
       s"maxBasket out of range: $maxBasketL")
     val maxBasket = maxBasketL.toInt
@@ -699,523 +647,125 @@ object Main {
     val tri = ops.Graph.triangleStats(rules,
       org.apache.spark.sql.functions.col("item_a"),
       org.apache.spark.sql.functions.col("item_b"))
-    if (n.has("out")) {
-      val out = n.get("out").asText()
-      rules.write.mode("overwrite").parquet(s"$out/rules")
-      census.write.mode("overwrite").parquet(s"$out/census")
-      tri.write.mode("overwrite").parquet(s"$out/triangles")
-      println(s"wrote $out/{rules,census,triangles}")
-    } else {
-      rules.show(20, truncate = false)
-      census.show(truncate = false)
-      tri.show(truncate = false)
+    n.opt("out").map(_.asText()) match {
+      case Some(out) =>
+        rules.write.mode("overwrite").parquet(s"$out/rules")
+        census.write.mode("overwrite").parquet(s"$out/census")
+        tri.write.mode("overwrite").parquet(s"$out/triangles")
+        println(s"wrote $out/{rules,census,triangles}")
+      case None =>
+        rules.show(20, truncate = false)
+        census.show(truncate = false)
+        tri.show(truncate = false)
     }
     0
   }
 
-  /** `-index` (engine extension): build / append / query a
-    * materialized IVF-PQ ANN index over an embedding column
-    * (ml/Similarity.scala: stageIvfPq / appendIvfPq / stagedIvfPqTopK),
-    * or `"action": "describe"` — print ANY graft index's shared
-    * manifest (util/IndexManifest: kind, version, build params,
-    * counts), validating it parses and is a supported version; works
-    * on BM25 / gram-census / IVF-PQ layouts alike, and `describe`
-    * needs only `"index"` in the config. `"action": "compact"` (also
-    * index-dir-only, kind-dispatched on the manifest) consolidates the
-    * one-file-per-append layout back to one file per partition and
-    * refreshes the manifest count appends leave stale — probe results
-    * unchanged by construction; refused for kinds with no append
-    * surface (BM25).
-    * Config: `{"source": <catalog root>, "namespace": "db.coll",
-    * "index": <index dir>, "action": "build"|"append"|"query"|"describe"}` with
-    * `"id"`/`"embedding"` column names (defaults `vec_id`/`embedding`);
-    * build takes `"centroids"` (64), `"m"` (4), `"ksub"` (16); query
-    * takes `"queries"` (a namespace, default the corpus namespace
-    * itself), `"k"` (5), `"nprobe"` (4) and optional `"out"`.
+  /** `-index` (engine extension): build, maintain and probe the staged
+    * indexes. Every kind is one entry of [[streaming.StagedKinds]],
+    * which documents that kind's knobs; this verb only dispatches.
+    * Config: `{"index": <index dir>, "action": ...}` plus, by action:
     *
-    * `"kind": "bm25"` switches the verbs to the staged BM25 inverted
-    * index (text/Retrieval.scala): build takes `"id"`/`"text"`
-    * (defaults `doc_id`/`text`) and `"buckets"` (64); append folds a
-    * namespace of NEW documents in at batch cost (buckets comes from
-    * the manifest — passing it is refused); query scores a `"queries"`
-    * namespace (same id/text columns, emitted as
-    * `query_id`/doc-id/rank/score) against the index.
+    *  - `build` / `append` / `query`, and the verbs only one kind has
+    *    (lsh `storetexts`, census `rebucket`): `"source"` (catalog
+    *    root), `"namespace"`, `"kind"` (`ivfpq` default, `flat`,
+    *    `census`, `bm25`, `lsh`, `fp`), `"id"` and the kind's value
+    *    column (`"text"` or `"embedding"`; defaults per kind). `append`
+    *    folds a namespace of NEW rows in at batch cost, refusing ids
+    *    already indexed unless `"assumeNewIds": true`; `query` probes
+    *    the `"queries"` namespace (default the corpus one) and writes
+    *    `"out"` or prints.
+    *  - verbs that need only the index dir, the kind read off its
+    *    manifest: `describe` (the shared manifest — kind, version,
+    *    build params, counts — plus list-occupancy skew on the IVF
+    *    kinds), `compact` (one file per partition again, manifest count
+    *    refreshed, probe results unchanged), `recluster` (IVF drift
+    *    maintenance, `"iters"` 3, reader-atomic generation flip) and
+    *    `reap` (drop the IVF read-grace generation early).
+    *  - streamed verbs, also manifest-dispatched, draining a parquet
+    *    `"feed"` with a `"checkpoint"`: `ingest` (one append per
+    *    micro-batch) and `admit` (the kind's admission gate — fp exact,
+    *    lsh text near-dup, flat semantic — admitted rows to `"out"`,
+    *    rejections audited to `"rejects"` when set). Both take
+    *    `"compactEvery"` and `"maxFilesPerTrigger"` (1).
     *
-    * `"kind": "census"` switches the same build/append/query verbs to
-    * the staged substring-dedup gram census
-    * (text/Substrings.scala) — the reference side of `-curate`'s
-    * `substrIndex` incremental cut: build takes `"id"`/`"text"`
-    * (defaults `doc_id`/`text`), `"k"` (40), `"buckets"` (64),
-    * `"mode": "exact"|"anchored"` (+ `"guarantee"`, default k+24), and
-    * for the exact mode `"hash": "md5"|"xxh64"` (md5 default — oracle-
-    * recomputable; xxh64 stores 8-byte census keys, 4× smaller, the
-    * production choice at scale); query probes a namespace and writes
-    * its duplicated spans.
-    *
-    * `"kind": "flat"` switches the verbs to the staged IVF-flat vector
-    * index (ml/Similarity.scala) — the exact-threshold SEMANTIC
-    * admission tier next to the PQ retrieval tier: build takes
-    * `"id"`/`"embedding"` (defaults `vec_id`/`embedding`) and
-    * `"centroids"` (64); query returns a namespace's genuinely-new
-    * vectors (no indexed neighbor of cosine ≥ `"minCos"`/1000, default
-    * 900, within `"nprobe"` probed lists, default 4).
-    *
-    * `"action": "ingest"` drains a parquet feed directory into ANY
-    * staged kind as a checkpointed stream (one append per micro-batch);
-    * `"action": "admit"` drains a feed through the index-resident
-    * ADMISSION gate instead — fp = exact, lsh = text near-dup,
-    * ivf_flat = semantic — writing admitted rows (full feed schema) to
-    * `"out"` and folding their fingerprints / band signatures /
-    * quantized vectors into the index. */
+    * Every verb but `build` refuses the kind's build knobs: the staged
+    * value is the index's contract. */
   private def index(spark: SparkSession, json: String): Int = {
-    val n = new ObjectMapper().readTree(json)
-    require(n != null && n.isObject, "index config must be a JSON object")
-    def req(f: String): String = {
-      require(n.has(f) && n.get(f).asText().nonEmpty, s"index config needs $f")
-      n.get(f).asText()
-    }
-    def int(f: String, dflt: Int): Int =
-      if (n.has(f)) n.get(f).asInt() else dflt
-    val idx = req("index"); val action = req("action")
-    if (action == "describe") {
-      // kind-agnostic: any staged index carries the shared manifest;
-      // the IVF kinds additionally report per-list occupancy skew —
-      // the drift diagnostic that says when a recluster is due
+    import streaming.StagedKinds
+    val c = CliConfig.parse("index", json)
+    val idx = c.req("index"); val action = c.req("action")
+    if (StagedKinds.ManifestVerbs.contains(action)) {
       val mf = graft.util.IndexManifest.read(spark, idx)
-      println(s"$idx: ${graft.util.IndexManifest.describe(mf)}")
-      if (streaming.StagedKinds.of(mf).ivf.nonEmpty) {
-        val s = ml.Similarity.listSkew(spark, idx)
-        println(f"  lists: ${s.nonEmptyLists}/${s.centroids} non-empty, " +
-          f"${s.nVectors} vectors, largest ${s.maxList}, " +
-          f"skew(max/mean) ${s.skew}%.2f")
+      val e = StagedKinds.of(mf)
+      e.refuseBuildKnobs(c)
+      val id = c.str("id", e.id); val value = c.str(e.value, e.value)
+      def feedStream(feed: String): DataFrame =
+        spark.readStream.schema(spark.read.parquet(feed).schema)
+          .option("maxFilesPerTrigger", c.int("maxFilesPerTrigger", 1))
+          .parquet(feed)
+      action match {
+        case "describe" =>
+          println(s"$idx: ${graft.util.IndexManifest.describe(mf)}")
+          if (e.ivf.nonEmpty) {
+            val s = ml.Similarity.listSkew(spark, idx)
+            println(f"  lists: ${s.nonEmptyLists}/${s.centroids} non-empty, " +
+              f"${s.nVectors} vectors, largest ${s.maxList}, " +
+              f"skew(max/mean) ${s.skew}%.2f")
+          }
+        case "compact" =>
+          e.compact(spark, idx)
+          println(s"compacted $idx")
+        case "recluster" =>
+          e.ivf.getOrElse(throw new IllegalArgumentException(
+              s"recluster supports the IVF kinds (got '${mf.kind}')"))
+            .recluster(spark, idx, c.int("iters", 3))
+          println(s"reclustered $idx")
+        case "reap" =>
+          val reaped = ml.Similarity.reapIvfGrace(spark, idx)
+          println(if (reaped.isEmpty) s"nothing to reap in $idx"
+            else s"reaped ${reaped.mkString(", ")} from $idx")
+        case "ingest" =>
+          val feed = c.req("feed"); val ckpt = c.req("checkpoint")
+          streaming.DocStream.ingestStream(feedStream(feed), id, value, idx,
+              ckpt, assumeNewIds = c.bool("assumeNewIds"),
+              compactEvery = c.int("compactEvery", 0))
+            .awaitTermination()
+          println(s"ingested $feed into $idx")
+        case "admit" =>
+          val feed = c.req("feed"); val ckpt = c.req("checkpoint")
+          val out = c.req("out")
+          val gate = e.admit.getOrElse(throw new IllegalArgumentException(
+            s"no admission gate for index kind '${mf.kind}' (" +
+              StagedKinds.all.flatMap(k => k.admit.map(g => s"${k.cli} = ${g.label}"))
+                .mkString(", ") + ")"))
+          gate.start(StagedKinds.AdmitArgs(c, feedStream(feed), id, value, idx,
+              out, ckpt, c.int("compactEvery", 0), c.opt("rejects").map(_.asText())))
+            .awaitTermination()
+          println(s"admitted $feed into $out against $idx")
       }
       return 0
     }
-    if (action == "recluster") {
-      // IVF drift maintenance (ml/Similarity.reclusterIvfFlat /
-      // reclusterIvfPq): re-seed + Lloyd-refine the coarse centroids
-      // over the STORED vectors (flat) or the codes' exact
-      // reconstructions (pq — the codebook is frozen and carried
-      // verbatim; a codebook refresh is an explicit restage from raw
-      // vectors, see the scaladoc) and reassign every row — frozen
-      // stage-time geometry otherwise degrades probe pruning as an
-      // append stream drifts. Optional "iters" (3). Reader-atomic
-      // generation commit: concurrent probes keep working through the
-      // flip.
-      val mf = graft.util.IndexManifest.read(spark, idx)
-      val ivf = streaming.StagedKinds.of(mf).ivf.getOrElse(
-        throw new IllegalArgumentException(
-          s"recluster supports the IVF kinds (got '${mf.kind}')"))
-      ivf.recluster(spark, idx, int("iters", 3))
-      println(s"reclustered $idx")
-      return 0
-    }
-    if (action == "reap") {
-      // generation-grace disk reclaim (ml/Similarity.reapIvfGrace):
-      // a recluster keeps the previous generation as a read-grace
-      // copy until the NEXT recluster — 2x vector storage on a
-      // rarely-reclustered index. The operator declares in-flight
-      // readers drained and reaps it early; the live pair and the
-      // manifest are never touched.
-      val reaped = ml.Similarity.reapIvfGrace(spark, idx)
-      println(if (reaped.isEmpty) s"nothing to reap in $idx"
-        else s"reaped ${reaped.mkString(", ")} from $idx")
-      return 0
-    }
-    if (action == "compact") {
-      // kind-dispatched on the MANIFEST (like describe, needs only the
-      // index dir): consolidate append-accumulated files back to one
-      // per partition, refresh the manifest count the appends left
-      // stale. Probe/query results are unchanged by construction.
-      streaming.StagedKinds.at(spark, idx).compact(spark, idx)
-      println(s"compacted $idx")
-      return 0
-    }
-    if (action == "ingest") {
-      // kind-dispatched INSIDE the shared entry point
-      // (streaming/DocStream.ingestStream — the StagedIndex trait's
-      // streaming twin): drain a parquet feed directory into the index
-      // as a real Structured Streaming query, one append per
-      // micro-batch, checkpointed offsets, optional periodic
-      // compaction. Config: {"index", "action": "ingest",
-      // "feed": <parquet dir>, "checkpoint": <dir>} + the kind's
-      // column names ("id" — defaults vec_id for ivf_pq, doc_id
-      // otherwise; "text"/"embedding" name the value column), optional
-      // "assumeNewIds", "compactEvery", "maxFilesPerTrigger" (1).
-      val feed = req("feed"); val ckpt = req("checkpoint")
-      // the IVF kinds are the vector kinds
-      val isVec = streaming.StagedKinds.at(spark, idx).ivf.nonEmpty
-      val id = if (n.has("id")) n.get("id").asText()
-        else if (isVec) "vec_id" else "doc_id"
-      val value =
-        if (isVec) { if (n.has("embedding")) n.get("embedding").asText()
-          else "embedding" }
-        else if (n.has("text")) n.get("text").asText() else "text"
-      streaming.DocStream.ingestStream(
-          spark.readStream.schema(spark.read.parquet(feed).schema)
-            .option("maxFilesPerTrigger", int("maxFilesPerTrigger", 1))
-            .parquet(feed),
-          id, value, idx, ckpt,
-          assumeNewIds = n.has("assumeNewIds") &&
-            n.get("assumeNewIds").asBoolean(),
-          compactEvery = int("compactEvery", 0))
-        .awaitTermination()
-      println(s"ingested $feed into $idx")
-      return 0
-    }
-    if (action == "admit") {
-      // streaming ADMISSION gate, kind-dispatched on the manifest:
-      // drain a parquet feed through the index-resident dedup gate —
-      // admitted docs (full feed schema) land in "out", their
-      // fingerprints/band signatures append into the index. fp = exact
-      // admission (DocStream.admitStream), lsh = near-dup admission
-      // (DocStream.admitNearStream, optional "maxBucket"; optional
-      // "verifyJaccard" threshold + "refTexts" parquet of the staged
-      // corpus switches to Jaccard-VERIFIED rejection, and "rejects"
-      // names a parquet dir for the (id, ref_id, jaccard) audit trail
-      // instead of discarding the evidence). "compactEvery": N runs
-      // the kind's compactor after every Nth micro-batch — a
-      // continuous drain otherwise accumulates one file per bucket
-      // per batch forever. For ivf_flat, "reclusterSkew": s (with
-      // compactEvery) auto-reclusters at compaction points whenever
-      // list-occupancy skew reads >= s — drift maintenance for a
-      // long-running semantic gate ("reclusterIters" tunes the Lloyd
-      // rounds). Config: {"index", "action": "admit",
-      // "feed": <parquet dir>, "checkpoint": <dir>, "out": <dir>}
-      // + optional "id"/"text" column names, "maxFilesPerTrigger" (1).
-      val feed = req("feed"); val ckpt = req("checkpoint")
-      val outP = req("out")
-      val mf = graft.util.IndexManifest.read(spark, idx)
-      val id = if (n.has("id")) n.get("id").asText() else "doc_id"
-      val textCol = if (n.has("text")) n.get("text").asText() else "text"
-      val src = spark.readStream.schema(spark.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", int("maxFilesPerTrigger", 1))
-        .parquet(feed)
-      val every = int("compactEvery", 0)
-      // every gate audits its rejections when "rejects" names a sink
-      // dir — the fate-audit knob shared across the admission family
-      val rejects = if (n.has("rejects"))
-        Some(n.get("rejects").asText()) else None
-      val gate = mf.kind match {
-        case graft.util.IndexManifest.KindFingerprints =>
-          streaming.DocStream.admitStream(src, id, textCol, idx, outP,
-            ckpt, compactEvery = every, rejectsPath = rejects)
-        case graft.util.IndexManifest.KindMinhashBands =>
-          streaming.DocStream.admitNearStream(src, id, textCol, idx, outP,
-            ckpt, maxBucket = int("maxBucket", 1000),
-            compactEvery = every,
-            verifyJaccard = if (n.has("verifyJaccard"))
-              Some(n.get("verifyJaccard").asDouble()) else None,
-            refTexts = if (n.has("refTexts"))
-              Some(spark.read.parquet(n.get("refTexts").asText())) else None,
-            rejectsPath = rejects)
-        case graft.util.IndexManifest.KindIvfFlat =>
-          streaming.DocStream.admitVecStream(src,
-            if (n.has("id")) id else "vec_id",
-            if (n.has("embedding")) n.get("embedding").asText()
-            else "embedding",
-            idx, outP, ckpt, minCosPermille = int("minCos", 900),
-            nprobe = int("nprobe", 4), compactEvery = every,
-            reclusterSkew = if (n.has("reclusterSkew"))
-              n.get("reclusterSkew").asDouble() else 0.0,
-            reclusterIters = int("reclusterIters", 3),
-            rejectsPath = rejects)
-        case other => throw new IllegalArgumentException(
-          s"no admission gate for index kind '$other' (fp = exact, " +
-            "lsh = text near-dup, ivf_flat = semantic)")
-      }
-      gate.awaitTermination()
-      println(s"admitted $feed into $outP against $idx")
-      return 0
-    }
-    val dir = req("source"); val ns = req("namespace")
+    val dir = c.req("source"); val ns = c.req("namespace")
     val cat = catalogAt(spark, dir,
       MigratorConfig(command = "data", source = dir, target = dir))
-    val kind = if (n.has("kind")) n.get("kind").asText() else "ivfpq"
-    require(Set("ivfpq", "flat", "census", "bm25", "lsh", "fp")(kind),
-      s"index kind must be ivfpq|flat|census|bm25|lsh|fp, got $kind")
-    def outOrShow(result: org.apache.spark.sql.DataFrame): Unit =
-      if (n.has("out")) {
-        val out = n.get("out").asText()
-        result.write.mode("overwrite").parquet(out)
-        println(s"wrote $out")
-      } else result.show(truncate = false)
-    if (kind == "bm25") {
-      // staged BM25 inverted index (text/Retrieval.scala) — the lexical
-      // retrieval surface: build/append tokenize a namespace into the
-      // bucketed postings/df/dl layout; query scores a query namespace
-      // (columns id + text) against it
-      import org.apache.spark.sql.functions.col
-      val id = if (n.has("id")) n.get("id").asText() else "doc_id"
-      val textCol = if (n.has("text")) n.get("text").asText() else "text"
+    val e = StagedKinds.cli(c.str("kind", "ivfpq"))
+    if (!e.verbs.contains(action))
+      throw new IllegalArgumentException(
+        s"unknown index action '$action' (${e.verbs.mkString("|")})")
+    val a = StagedKinds.Args(spark, c, idx, c.str("id", e.id),
+      c.str(e.value, e.value), ns, cat.read)
+    if (action == "build") println(s"built ${e.build(a)} for $ns at $idx")
+    else {
+      e.refuseBuildKnobs(c)
+      e.check(a)
       action match {
-        case "build" =>
-          text.Retrieval.stageBm25(cat.read(ns), id, col(textCol), idx,
-            buckets = int("buckets", 64))
-          println(s"built bm25 index for $ns at $idx")
         case "append" =>
-          require(!n.has("buckets"),
-            "bm25 config has 'buckets' but the index's staged value is " +
-              "the contract — drop it (only 'build' takes it)")
-          // new-ids guard on by default; assumeNewIds=true is the
-          // explicit escape hatch (see Retrieval.appendBm25)
-          text.Retrieval.appendBm25(cat.read(ns), id, col(textCol), idx,
-            assumeNewIds = n.has("assumeNewIds") &&
-              n.get("assumeNewIds").asBoolean())
+          e.append(spark, idx, a.id, a.value, c.bool("assumeNewIds"))(a.corpus)
           println(s"appended $ns into $idx")
-        case "query" =>
-          val qns = if (n.has("queries")) n.get("queries").asText() else ns
-          // queries usually share the corpus' column names — rename so
-          // the output's (query_id, doc-id) pair never collides
-          val qs = cat.read(qns)
-            .select(col(id).as("query_id"), col(textCol).as("qtext"))
-          outOrShow(text.Retrieval.stagedBm25TopK(spark, idx, qs,
-              "query_id", col("qtext"), k = int("k", 5))
-            .orderBy("query_id", "rank"))
-        case other =>
-          throw new IllegalArgumentException(
-            s"unknown index action '$other' (build|append|query|ingest|admit|compact|recluster|describe)")
+        case "query" => writeOrShow(c, e.query(a))
+        case verb => println(e.extra(verb)(a))
       }
-      return 0
-    }
-    if (kind == "flat") {
-      // staged IVF-flat vector index (ml/Similarity.scala) — the
-      // reference side of incremental SEMANTIC admission: build
-      // quantizes a namespace's embeddings into list-partitioned raw
-      // vectors, query returns a probe namespace's genuinely-new
-      // vectors (no indexed neighbor of cosine >= minCos/1000 in the
-      // nprobe probed lists), append folds in an admitted batch
-      import org.apache.spark.sql.functions.col
-      val id = if (n.has("id")) n.get("id").asText() else "vec_id"
-      val emb = if (n.has("embedding")) n.get("embedding").asText()
-        else "embedding"
-      action match {
-        case "build" =>
-          ml.Similarity.stageIvfFlat(cat.read(ns), id, emb,
-            numCentroids = int("centroids", 64), dir = idx)
-          println(s"built ivf-flat index for $ns at $idx")
-        case "append" =>
-          require(!n.has("centroids"),
-            "flat config has 'centroids' but the index's staged value is " +
-              "the contract — drop it (only 'build' takes it)")
-          ml.Similarity.appendIvfFlat(cat.read(ns), id, emb, idx)
-          println(s"appended $ns into $idx")
-        case "query" =>
-          require(!n.has("centroids"),
-            "flat config has 'centroids' but the index's staged value is " +
-              "the contract — drop it (only 'build' takes it)")
-          val qns = if (n.has("queries")) n.get("queries").asText() else ns
-          outOrShow(ml.Similarity.vecNewStaged(cat.read(qns), id, emb, idx,
-              minCosPermille = int("minCos", 900), nprobe = int("nprobe", 4))
-            .orderBy(id))
-        case other =>
-          throw new IllegalArgumentException(
-            s"unknown index action '$other' (build|append|query|ingest|admit|compact|recluster|describe)")
-      }
-      return 0
-    }
-    if (kind == "fp") {
-      // staged exact-dedup fingerprint set (text/Dedup.scala) — the
-      // reference side of incremental EXACT admission: build hashes a
-      // namespace once, query returns a probe namespace's genuinely-new
-      // docs, append folds in an admitted batch's fingerprints
-      import org.apache.spark.sql.functions.col
-      val id = if (n.has("id")) n.get("id").asText() else "doc_id"
-      val textCol = if (n.has("text")) n.get("text").asText() else "text"
-      action match {
-        case "build" =>
-          text.Dedup.stageFingerprints(cat.read(ns), col(textCol), idx,
-            buckets = int("buckets", 64))
-          println(s"built fingerprint index for $ns at $idx")
-        case "append" =>
-          require(!n.has("buckets"),
-            "fp config has 'buckets' but the index's staged value is the " +
-              "contract — drop it (only 'build' takes it)")
-          text.Dedup.appendFingerprints(cat.read(ns), col(textCol), idx)
-          println(s"appended $ns into $idx")
-        case "query" =>
-          require(!n.has("buckets"),
-            "fp config has 'buckets' but the index's staged value is the " +
-              "contract — drop it (only 'build' takes it)")
-          val qns = if (n.has("queries")) n.get("queries").asText() else ns
-          outOrShow(text.Dedup.exactNewStaged(cat.read(qns), id,
-              col(textCol), idx)
-            .orderBy(id))
-        case other =>
-          throw new IllegalArgumentException(
-            s"unknown index action '$other' (build|append|query|ingest|admit|compact|recluster|describe)")
-      }
-      return 0
-    }
-    if (kind == "lsh") {
-      // staged MinHash band index (text/Dedup.scala) — the reference
-      // side of incremental near-dup admission: build signs a namespace
-      // under a frozen recipe, query returns (batch_id, ref_id)
-      // candidate pairs for a probe namespace
-      import org.apache.spark.sql.functions.col
-      val id = if (n.has("id")) n.get("id").asText() else "doc_id"
-      val textCol = if (n.has("text")) n.get("text").asText() else "text"
-      def refuseLshBuildKnobs(): Unit =
-        Seq("numHashes", "rowsPerBand", "shingleWords", "buckets",
-            "storeTexts").foreach(f =>
-          require(!n.has(f),
-            s"lsh config has '$f' but the index's staged value is the " +
-              "contract — drop it (only 'build' takes it)"))
-      action match {
-        case "build" =>
-          // "storeTexts": true makes the index self-contained for
-          // Jaccard-VERIFIED admission (texts ride the id-bucketed
-          // ids/ rows; the admit verb's verifyJaccard then needs no
-          // refTexts and re-scans nothing corpus-sized per batch)
-          text.Dedup.stageBandIndex(cat.read(ns), id, col(textCol), idx,
-            numHashes = int("numHashes", 16),
-            rowsPerBand = int("rowsPerBand", 2),
-            shingleWords = int("shingleWords", 3),
-            buckets = int("buckets", 16),
-            storeTexts = n.has("storeTexts") &&
-              n.get("storeTexts").asBoolean())
-          println(s"built lsh band index for $ns at $idx")
-        case "append" =>
-          refuseLshBuildKnobs()
-          text.Dedup.appendBandIndex(cat.read(ns), id, col(textCol), idx,
-            assumeNewIds = n.has("assumeNewIds") &&
-              n.get("assumeNewIds").asBoolean())
-          println(s"appended $ns into $idx")
-        case "query" =>
-          refuseLshBuildKnobs()
-          val qns = if (n.has("queries")) n.get("queries").asText() else ns
-          outOrShow(text.Dedup.lshNewCandidatesStaged(cat.read(qns), id,
-              col(textCol), idx, maxBucket = int("maxBucket", 1000))
-            .orderBy("batch_id", "ref_id"))
-        case "storetexts" =>
-          // legacy -> store-texts migration (Dedup.migrateBandIndexTexts):
-          // rebuild the index self-contained for Jaccard-verified
-          // admission under its frozen recipe. The frame must be the
-          // index's exact doc set: the staged namespace UNION the
-          // gate's admitted out dir ("admitted") — both directions
-          // guarded.
-          refuseLshBuildKnobs()
-          val base = cat.read(ns).select(col(id), col(textCol))
-          val frame = (if (n.has("admitted"))
-              base.unionByName(spark.read.parquet(n.get("admitted").asText())
-                .select(col(id), col(textCol)))
-            else base).localCheckpoint(true) // evaluated 3x by the verb
-          try text.Dedup.migrateBandIndexTexts(frame, id, col(textCol), idx)
-          finally graft.util.LocalCkpt.release(frame)
-          println(s"migrated $idx to the store-texts layout")
-        case other =>
-          throw new IllegalArgumentException(
-            s"unknown index action '$other' (build|append|query|ingest|admit|compact|recluster|describe|storetexts)")
-      }
-      return 0
-    }
-    if (kind == "census") {
-      // staged substring-dedup census (text/Substrings.scala) — the
-      // reference side of `-curate`'s `substrIndex` incremental cut
-      import org.apache.spark.sql.functions.col
-      val id = if (n.has("id")) n.get("id").asText() else "doc_id"
-      val textCol = if (n.has("text")) n.get("text").asText() else "text"
-      val mode = if (n.has("mode")) n.get("mode").asText() else "exact"
-      require(Set("exact", "anchored")(mode),
-        s"census mode must be exact|anchored, got $mode")
-      // mode/k/buckets/guarantee parameterize the BUILD; append/query
-      // take the whole discipline from the index's own manifest — a
-      // config knob that would be silently ignored is refused instead
-      def indexMode(): String = text.Substrings.censusMode(
-        graft.util.IndexManifest.validate(spark, idx,
-          graft.util.IndexManifest.KindGramCensus))
-      def refuseBuildKnobs(): Unit =
-        Seq("k", "buckets", "guarantee", "hash").foreach(f =>
-          require(!n.has(f),
-            s"census config has '$f' but the index's staged value is the " +
-              "contract — drop it (only 'build' takes it)"))
-      action match {
-        case "build" =>
-          val k = int("k", 40)
-          require(!n.has("guarantee") || mode == "anchored",
-            "census config has 'guarantee' but mode is not 'anchored' — " +
-              "guarantee only parameterizes the anchored census")
-          // hash is a build-time param for BOTH modes: exact spans are
-          // hash-invariant; anchored selection changes with the rank
-          // hash but keeps the window guarantee (Substrings.winnowRows)
-          val hash = if (n.has("hash")) n.get("hash").asText()
-            else text.Substrings.HashMd5
-          if (mode == "anchored")
-            text.Substrings.stageAnchorCensus(cat.read(ns), id, col(textCol),
-              k, guarantee = int("guarantee", k + 24), dir = idx,
-              buckets = int("buckets", 64), hash = hash)
-          else
-            text.Substrings.stageGramCensus(cat.read(ns), id, col(textCol),
-              k, dir = idx, buckets = int("buckets", 64), hash = hash)
-          println(s"built $mode census for $ns at $idx")
-        case "append" =>
-          refuseBuildKnobs()
-          val im = indexMode()
-          require(!n.has("mode") || mode == im,
-            s"config mode '$mode' contradicts the index's '$im' discipline")
-          if (im == "anchored")
-            text.Substrings.appendAnchorCensus(cat.read(ns), id, col(textCol), idx)
-          else
-            text.Substrings.appendGramCensus(cat.read(ns), id, col(textCol), idx)
-          println(s"appended $ns into $idx")
-        case "query" =>
-          refuseBuildKnobs()
-          val im = indexMode()
-          require(!n.has("mode") || mode == im,
-            s"config mode '$mode' contradicts the index's '$im' discipline")
-          val qns = if (n.has("queries")) n.get("queries").asText() else ns
-          outOrShow(text.Substrings
-            .probeIndex(cat.read(qns), id, col(textCol), idx)
-            .orderBy(id, "span_start"))
-        case "rebucket" =>
-          // corpus-scaled bucket maintenance (Substrings.rebucketCensus):
-          // an append-grown census outgrows its stage-time bucket count
-          // and key-dense probes go scan-bound; optional "perBucket"
-          // (1024 grams) sizes the new count. Stage-grade commit —
-          // re-open any handles after.
-          val nb = text.Substrings.rebucketCensus(spark, idx,
-            perBucket = int("perBucket", 1024).toLong)
-          println(s"rebucketed $idx to $nb buckets")
-        case other =>
-          throw new IllegalArgumentException(
-            s"unknown index action '$other' (build|append|query|ingest|admit|compact|recluster|describe)")
-      }
-      return 0
-    }
-    val id = if (n.has("id")) n.get("id").asText() else "vec_id"
-    val emb = if (n.has("embedding")) n.get("embedding").asText() else "embedding"
-    // build geometry is the index's frozen contract — on append/query a
-    // centroids/m/ksub knob would be silently ignored, so it is refused
-    // (the census/bm25 discipline)
-    def refusePqBuildKnobs(): Unit =
-      Seq("centroids", "m", "ksub").foreach(f =>
-        require(!n.has(f),
-          s"ivfpq config has '$f' but the index's staged value is the " +
-            "contract — drop it (only 'build' takes it)"))
-    action match {
-      case "build" =>
-        ml.Similarity.stageIvfPq(cat.read(ns), id, emb,
-          numCentroids = int("centroids", 64), m = int("m", 4),
-          ksub = int("ksub", 16), dir = idx)
-        println(s"built index for $ns at $idx")
-      case "append" =>
-        refusePqBuildKnobs()
-        // new-ids guard on by default; assumeNewIds=true is the
-        // explicit escape hatch (see Similarity.appendIvfPq)
-        ml.Similarity.appendIvfPq(cat.read(ns), id, emb, dir = idx,
-          assumeNewIds = n.has("assumeNewIds") &&
-            n.get("assumeNewIds").asBoolean())
-        println(s"appended $ns into $idx")
-      case "query" =>
-        refusePqBuildKnobs()
-        val qns = if (n.has("queries")) n.get("queries").asText() else ns
-        val result = ml.Similarity.stagedIvfPqTopK(spark, idx,
-            cat.read(qns), id, emb, k = int("k", 5), nprobe = int("nprobe", 4))
-          .orderBy("query_id", "rank")
-        outOrShow(result)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown index action '$other' (build|append|query|ingest|admit|compact|recluster|describe)")
     }
     0
   }
@@ -1231,27 +781,18 @@ object Main {
     * tokenize under the trained model → `<out>/encoded`. */
   private def tokenize(spark: SparkSession, json: String): Int = {
     import org.apache.spark.sql.functions.col
-    val n = new ObjectMapper().readTree(json)
-    require(n != null && n.isObject, "tokenize config must be a JSON object")
-    def req(f: String): String = {
-      require(n.has(f) && n.get(f).asText().nonEmpty, s"tokenize config needs $f")
-      n.get(f).asText()
-    }
-    def int(f: String, dflt: Int): Int =
-      if (n.has(f)) n.get(f).asInt() else dflt
-    def str(f: String, dflt: String): String =
-      if (n.has(f)) n.get(f).asText() else dflt
-    val dir = req("source"); val ns = req("namespace"); val out = req("out")
-    val idCol = str("id", "doc_id"); val textCol = str("text", "text")
+    val n = CliConfig.parse("tokenize", json)
+    val dir = n.req("source"); val ns = n.req("namespace"); val out = n.req("out")
+    val idCol = n.str("id", "doc_id"); val textCol = n.str("text", "text")
     val cat = catalogAt(spark, dir,
       MigratorConfig(command = "data", source = dir, target = dir))
     val corpus = cat.read(ns)
     val (merges, syms) = text.Bpe.trainMerges(corpus, col(textCol),
-      int("merges", 32), int("maxWords", 50000))
+      n.int("merges", 32), n.int("maxWords", 50000))
     merges.coalesce(1).write.mode("overwrite").parquet(s"$out/merges")
     text.Bpe.fertility(corpus, idCol, col(textCol), syms)
       .write.mode("overwrite").parquet(s"$out/fertility")
-    n.path("encode").asText("") match {
+    n.opt("encode").fold("")(_.asText("")) match {
       case "" => ()
       case encNs =>
         text.Bpe.encode(cat.read(encNs), idCol, col(textCol),
@@ -1272,15 +813,13 @@ object Main {
     * result is written there as parquet; otherwise up to
     * `"limit"` (default 20) rows print to stdout. */
   private def sql(spark: SparkSession, json: String): Int = {
-    val n = new ObjectMapper().readTree(json)
-    require(n != null && n.isObject, "sql config must be a JSON object")
-    val dir = if (n.has("source")) n.get("source").asText() else ""
+    val n = CliConfig.parse("sql", json)
+    val dir = n.str("source", "")
     require(dir.nonEmpty, "sql config needs a source (catalog root)")
-    val query =
-      if (n.has("query")) n.get("query").asText()
-      else if (n.has("queryFile")) new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(n.get("queryFile").asText())), "UTF-8")
-      else ""
+    val query = n.opt("query").map(_.asText())
+      .orElse(n.opt("queryFile").map(f => new String(java.nio.file.Files
+        .readAllBytes(java.nio.file.Paths.get(f.asText())), "UTF-8")))
+      .getOrElse("")
     require(query.trim.nonEmpty, "sql config needs a query (or queryFile)")
     GraftFunctions.register(spark)
     val cat = catalogAt(spark, dir,
@@ -1296,15 +835,21 @@ object Main {
       .foreach { case (coll, ns) =>
         cat.read(ns).createOrReplaceTempView(viewName(coll))
       }
-    val result = spark.sql(query)
-    if (n.has("out")) {
-      val out = n.get("out").asText()
-      result.write.mode("overwrite").parquet(out)
-      println(s"wrote $out")
-    } else {
-      val limit = if (n.has("limit")) n.get("limit").asInt() else 20
-      result.show(limit, truncate = false)
-    }
+    writeOrShow(n, spark.sql(query), n.int("limit", 20))
     0
   }
+
+  /** A string-array key, or `dflt` when absent. */
+  private def strings(n: CliConfig, f: String, dflt: Seq[String]): Seq[String] =
+    n.opt(f).fold(dflt)(_.elements().asScala.map(_.asText()).toSeq)
+
+  /** Write `result` as parquet to the config's `"out"`, or print its
+    * first `rows` rows. */
+  private def writeOrShow(n: CliConfig, result: DataFrame, rows: Int = 20): Unit =
+    n.opt("out").map(_.asText()) match {
+      case Some(out) =>
+        result.write.mode("overwrite").parquet(out)
+        println(s"wrote $out")
+      case None => result.show(rows, truncate = false)
+    }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
 /** Content-defined-chunking boundary positions over a binary payload —
   * the native one-pass twin of the declarative
   * `filter(transform(sequence(...), i => md5(substr(...))))`
-  * formulation in [[graft.mm.BinaryOps.cdcBoundariesDeclarative]]
-  * (pinned equal by BinaryOpsSpec).
+  * formulation (`BinaryOracles.cdcBoundariesDeclarative`, pinned equal
+  * by BinaryOpsSpec).
   *
   * A position `i` (1-based, `window ≤ i ≤ len`) is a boundary when the
   * md5 of the `window` bytes ENDING at `i` has `maskHexChars` leading

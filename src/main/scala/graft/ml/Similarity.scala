@@ -656,18 +656,6 @@ object Similarity {
     }
   }
 
-  /** The live sublayout DIR NAMES of an IVF-PQ index under its
-    * manifest — the [[ivfFlatNames]] discipline applied to the PQ
-    * kind: plain (`codes`, `meta`) as staged, or the current
-    * GENERATION pair (`codes.gN`, `meta.gN`) once [[reclusterIvfPq]]
-    * has run. One manifest read resolves a geometry-consistent pair;
-    * the recluster flips both with a single atomic manifest rewrite. */
-  private[graft] def ivfPqNames(mf: graft.util.IndexManifest): (String, String) =
-    mf.params.get("gen") match {
-      case Some(g) => (s"codes.g$g", s"meta.g$g")
-      case None => ("codes", "meta")
-    }
-
   /** One geometry-consistent snapshot of a [[stageIvfPq]] index — the
     * [[IvfFlatHandle]] discipline: manifest, RESOLVED sublayout paths,
     * centroids and codebook, all from one manifest read, so a
@@ -698,7 +686,7 @@ object Similarity {
       dir: String): IvfPqHandle = {
     val mf = graft.util.IndexManifest.validate(spark, dir,
       graft.util.IndexManifest.KindIvfPq)
-    val (c, m) = ivfPqNames(mf)
+    val (c, m) = ivfNames("codes", mf)
     val meta = spark.read.schema(IvfPqMetaSchema).parquet(s"$dir/$m").collect()
     val cents: IndexedSeq[Seq[Long]] = meta.filter(_.getString(0) == "cent")
       .sortBy(_.getInt(2)).map(_.getSeq[Long](3)).toIndexedSeq
@@ -773,7 +761,7 @@ object Similarity {
       // codes rows are immutable per-vector facts: pure consolidation
       // of the LIVE generation's codes dir (plain `codes` as staged,
       // `codes.gN` after a recluster)
-      Seq(Layout(ivfPqNames(mf)._1, Some("list"),
+      Seq(Layout(ivfNames("codes", mf)._1, Some("list"),
         _.observe(obs, count(lit(1)).as("n_vectors"))
           .select(col("id"), col("code"), col("list")))) // layout column order
     } { _ => Map("n_vectors" -> obs.get("n_vectors").asInstanceOf[Long]) }
@@ -897,19 +885,43 @@ object Similarity {
     }
   }
 
-  /** The live sublayout DIR NAMES of an IVF-flat index under its
-    * manifest: plain (`vecs`, `meta`) as staged, or the current
-    * GENERATION pair (`vecs.gN`, `meta.gN`) once [[reclusterIvfFlat]]
-    * has run — the generation number is a manifest param, so ONE
-    * manifest read resolves a geometry-consistent (vecs, meta) pair
-    * and a recluster flips both with a single atomic manifest rewrite
-    * (readers see the whole old index or the whole new one, never a
-    * mixed geometry and never a missing layout). */
-  private[graft] def ivfFlatNames(mf: graft.util.IndexManifest): (String, String) =
+  /** The live sublayout DIR NAMES of an IVF index under its manifest,
+    * for the kind's data layout `base` (`vecs` flat, `codes` PQ): plain
+    * (`base`, `meta`) as staged, or the current GENERATION pair
+    * (`base.gN`, `meta.gN`) once a recluster has run — the generation
+    * number is a manifest param, so ONE manifest read resolves a
+    * geometry-consistent pair and a recluster flips both with a single
+    * atomic manifest rewrite (readers see the whole old index or the
+    * whole new one, never a mixed geometry and never a missing
+    * layout). */
+  private[graft] def ivfNames(base: String,
+      mf: graft.util.IndexManifest): (String, String) =
     mf.params.get("gen") match {
-      case Some(g) => (s"vecs.g$g", s"meta.g$g")
-      case None => ("vecs", "meta")
+      case Some(g) => (s"$base.g$g", s"meta.g$g")
+      case None => (base, "meta")
     }
+
+  /** Delete every generation dir of layout `base` (and of `meta`)
+    * under `dir` that is not the manifest's live pair — the grace copy
+    * and stale next-gen dirs from a crashed flip — plus, with `tmps`,
+    * pre-generation `*.__recluster__` tmps from older layouts. Returns
+    * the deleted dir names, sorted. */
+  private def sweepGenerations(spark: org.apache.spark.sql.SparkSession,
+      dir: String, base: String, mf: graft.util.IndexManifest,
+      tmps: Boolean): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val (data, meta) = ivfNames(base, mf)
+    val fs = new Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(dir)).map(_.getPath)
+      .filter { p =>
+        val n = p.getName
+        (n.matches(s"($base|meta)(\\.g\\d+)?") && n != data && n != meta) ||
+          (tmps && n.endsWith(".__recluster__"))
+      }
+      .map { p => fs.delete(p, true): Unit; p.getName }
+      .toSeq.sorted
+  }
 
   /** One geometry-consistent snapshot of a [[stageIvfFlat]] index:
     * the manifest, the RESOLVED sublayout paths, and the centroids —
@@ -929,15 +941,11 @@ object Similarity {
       dir: String): IvfFlatHandle = {
     val mf = graft.util.IndexManifest.validate(spark, dir,
       graft.util.IndexManifest.KindIvfFlat)
-    val (v, m) = ivfFlatNames(mf)
+    val (v, m) = ivfNames("vecs", mf)
     IvfFlatHandle(mf, s"$dir/$v", s"$dir/$m",
       spark.read.schema(IvfFlatMetaSchema).parquet(s"$dir/$m").collect()
         .sortBy(_.getInt(0)).map(_.getSeq[Long](1)).toIndexedSeq)
   }
-
-  /** The frozen centroids of a [[stageIvfFlat]] dir. */
-  private def readIvfFlatMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): IndexedSeq[Seq[Long]] = openIvfFlat(spark, dir).cents
 
   /** The vecs layout at its RESOLVED path ([[IvfFlatHandle]]),
     * empty-tolerant ([[graft.util.StagedIndex.readLayout]]): with data
@@ -1014,7 +1022,7 @@ object Similarity {
         graft.util.IndexManifest.KindIvfFlat) { mf =>
       // compact the LIVE generation's vecs dir (plain `vecs` as
       // staged, `vecs.gN` after a recluster)
-      Seq(Layout(ivfFlatNames(mf)._1, Some("list"),
+      Seq(Layout(ivfNames("vecs", mf)._1, Some("list"),
         _.select(col("id"), col("q"), col("n2"), col("list")).distinct()
           .observe(obs, count(lit(1)).as("n_vectors"))))
     } { _ => Map("n_vectors" -> obs.get("n_vectors").asInstanceOf[Long]) }
@@ -1065,24 +1073,15 @@ object Similarity {
     * would land rows in the dead generation. */
   def reclusterIvfFlat(spark: org.apache.spark.sql.SparkSession,
       dir: String, iters: Int = 3): Unit = {
-    import org.apache.hadoop.fs.Path
     val mf = graft.util.IndexManifest.validate(spark, dir,
       graft.util.IndexManifest.KindIvfFlat)
-    val (vLive, mLive) = ivfFlatNames(mf)
+    val (vLive, mLive) = ivfNames("vecs", mf)
     val nextGen = mf.params.get("gen").map(_.toInt + 1).getOrElse(1)
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     // clear everything that is not the LIVE pair: the grace copy the
     // previous recluster left (its readers have had a full recluster
     // interval to finish), stale next-gen dirs from a crashed flip,
-    // and pre-generation `*.__recluster__` tmps from older layouts
-    val live = Set(vLive, mLive)
-    fs.listStatus(new Path(dir)).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if ((n.matches("(vecs|meta)(\\.g\\d+)?") && !live(n)) ||
-          n.endsWith(".__recluster__"))
-        fs.delete(p, true): Unit
-    }
+    // and pre-generation tmps
+    sweepGenerations(spark, dir, "vecs", mf, tmps = true): Unit
     val cents0 = spark.read.schema(IvfFlatMetaSchema)
       .parquet(s"$dir/$mLive").collect()
       .sortBy(_.getInt(0)).map(_.getSeq[Long](1)).toIndexedSeq
@@ -1159,21 +1158,11 @@ object Similarity {
     * index. Writers stay single-writer. */
   def reclusterIvfPq(spark: org.apache.spark.sql.SparkSession,
       dir: String, iters: Int = 3): Unit = {
-    import org.apache.hadoop.fs.Path
     val h = openIvfPq(spark, dir)
-    val (cLive, mLive) = ivfPqNames(h.mf)
     val nextGen = h.mf.params.get("gen").map(_.toInt + 1).getOrElse(1)
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // clear everything that is not the LIVE pair (grace copy, stale
-    // next-gen dirs from a crashed flip) — the reclusterIvfFlat sweep
-    val live = Set(cLive, mLive)
-    fs.listStatus(new Path(dir)).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if ((n.matches("(codes|meta)(\\.g\\d+)?") && !live(n)) ||
-          n.endsWith(".__recluster__"))
-        fs.delete(p, true): Unit
-    }
+    // clear everything that is not the LIVE pair — the reclusterIvfFlat
+    // sweep
+    sweepGenerations(spark, dir, "codes", h.mf, tmps = true): Unit
     val codes = readIvfPqCodes(spark, h)
     // exact reconstruction from the stored code: subspace j's codeword
     // (codes are 1-based — array_position — so element_at is direct)
@@ -1232,21 +1221,11 @@ object Similarity {
     * Returns the deleted dir names (empty = nothing to reap). */
   def reapIvfGrace(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val mf = graft.util.IndexManifest.read(spark, dir)
     val ivf = graft.streaming.StagedKinds.of(mf).ivf.getOrElse(
       throw new IllegalArgumentException(s"reapIvfGrace: '${mf.kind}' " +
         "has no generation layout (IVF kinds only)"))
-    val (data, meta) = ivf.live(mf)
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new Path(dir)).map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.matches(s"(${ivf.base}|meta)(\\.g\\d+)?") && n != data && n != meta
-      }
-      .map { p => fs.delete(p, true): Unit; p.getName }
-      .toSeq.sorted
+    sweepGenerations(spark, dir, ivf.base, mf, tmps = false)
   }
 
   /** Per-list occupancy of an IVF-partitioned staged layout — the

@@ -70,26 +70,6 @@ object BinaryOps {
         org.apache.spark.sql.graftbridge.ExprBridge.expression(bin),
         window, maskHexChars))
 
-  /** Declarative twin of [[cdcBoundariesCol]] — the SQL-engine-portable
-    * formulation the DuckDB oracle mirrors, and the equivalence anchor
-    * for the native expression (BinaryOpsSpec pins them equal). Pays an
-    * interpreted lambda + hex compare per byte; use the native column
-    * in pipelines. */
-  def cdcBoundariesDeclarative(bin: Column, window: Int = 8,
-      maskHexChars: Int = 1): Column = {
-    val zeros = lit("0" * maskHexChars)
-    val len = length(bin)
-    when(len >= window,
-      filter(
-        transform(sequence(lit(window), len),
-          i => when(substring(md5(bin.substr(i - lit(window) + 1, lit(window))),
-            1, maskHexChars) === zeros, i)),
-        x => x.isNotNull))
-      // shorter-than-window → no boundaries; NULL payload → NULL
-      // (matching the native expression's null propagation)
-      .when(bin.isNotNull, array().cast("array<int>"))
-  }
-
   /** Content-defined chunking: one row per chunk between consecutive
     * boundaries (final cut at the payload end). Output: (idCol,
     * chunk_idx, chunk_md5, chunk_len). Narrow per-row expansion —

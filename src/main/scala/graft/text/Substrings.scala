@@ -90,17 +90,6 @@ object Substrings {
       .select(col(idCol), (col("__p0") + 1).as("p"), col("h"))
   }
 
-  /** Declarative twin of [[gramRows]]' native expression — pinned equal
-    * by SubstringsSpec; the formulation the DuckDB oracle mirrors. */
-  private[graft] def gramRowsDeclarative(df: DataFrame, idCol: String,
-      text: Column, k: Int, maxChars: Int = 0): DataFrame = {
-    val t = capped(text, maxChars)
-    df.filter(text.isNotNull && length(t) >= k)
-      .select(col(idCol), explode(sequence(lit(1), length(t) - (k - 1))).as("p"),
-        t.as("__t"))
-      .select(col(idCol), col("p"), md5(col("__t").substr(col("p"), lit(k))).as("h"))
-  }
-
   /** Maximal duplicated spans per document (see object doc, exact
     * path): (idCol, span_start, span_end, span_len), 1-based inclusive
     * char bounds, spans disjoint and non-adjacent per document.
@@ -826,7 +815,7 @@ object Substrings {
     mergeSpans(spans, idCol)
   }
 
-  private def capped(text: Column, maxChars: Int): Column = {
+  private[graft] def capped(text: Column, maxChars: Int): Column = {
     require(maxChars >= 0, "maxChars must be >= 0")
     if (maxChars == 0) text else substring(text, 1, maxChars)
   }

@@ -556,8 +556,9 @@ object TextFunctions {
     * NARROW plan: [[graft.functions.ShingleStats]] computes both values
     * in one pass per doc — no explode, no per-doc hash aggregate (the
     * exploded plan shuffled one row per (doc, shingle)), and each
-    * DISTINCT shingle is digested once. Pinned equal to
-    * [[fingerprintExploded]] by ExprsSpec. */
+    * DISTINCT shingle is digested once. Pinned equal to its
+    * explode+aggregate twin (`TextOracles.fingerprintExploded`) by
+    * ExprsSpec. */
   def fingerprint(df: DataFrame, idCol: String, text: Column, k: Int = 12): DataFrame = {
     import org.apache.spark.sql.graftbridge.ExprBridge
     // the null filter runs on the INPUT column: `__st` is null exactly
@@ -573,19 +574,7 @@ object TextFunctions {
       .select(col(idCol),
         col("__st").getField("fingerprint").as("fingerprint"),
         col("__st").getField("n_shingles").as("n_shingles"))
-  }
-
-  /** Declarative explode+aggregate formulation of [[fingerprint]]
-    * (spec-only equivalence twin). */
-  private[graft] def fingerprintExploded(df: DataFrame, idCol: String,
-      text: Column, k: Int = 12): DataFrame =
-    df.select(col(idCol),
-        substring(lower(text), 1, Shingles.MaxChars).as("__t"))
-      .select(col(idCol), explode(Shingles.charShinglesOf(col("__t"), k)).as("s"))
-      .groupBy(col(idCol))
-      .agg(min(md5(col("s"))).as("fingerprint"),
-        countDistinct(col("s")).as("n_shingles"))
-}
+  }}
 
 /** Shingle builders shared by dedup / fingerprinting.
   *
@@ -603,17 +592,10 @@ object Shingles {
   val MaxChars = 2048
 
   /** Character k-shingles over a BOUND capped-prefix column. Native
-    * codegen expression (one loop per row); [[charShinglesHof]] is the
-    * declarative reference it is pinned against. */
+    * codegen expression (one loop per row); `TextOracles.charShinglesHof`
+    * is the declarative reference it is pinned against. */
   def charShinglesOf(t: Column, k: Int): Column =
     ExprBridge.column(graft.functions.CharShingles(ExprBridge.expression(t), k))
-
-  /** Declarative reference formulation of [[charShinglesOf]] (spec-only). */
-  private[graft] def charShinglesHof(t: Column, k: Int): Column =
-    transform(
-      sequence(lit(1), greatest(length(t) - (k - 1), lit(1))),
-      i => substring(t, i, lit(k)))
-
   /** Character k-shingles of lower(text), capped at [[MaxChars]].
     * Convenience for small inputs/tests — hot paths bind the prefix
     * first (see class doc). */
@@ -623,22 +605,10 @@ object Shingles {
   /** Word n-grams over a BOUND word-array column: a sub-n-word doc
     * yields one NULL shingle, matching SQL `w[i] || ' ' || w[i+1]`
     * semantics exactly. Native codegen expression (one loop per row);
-    * [[wordNGramsHof]] is the declarative reference it is pinned
-    * against. */
+    * `TextOracles.wordNGramsHof` is the declarative reference it is
+    * pinned against. */
   def wordNGramsOf(w: Column, n: Int): Column =
     ExprBridge.column(graft.functions.WordNGrams(ExprBridge.expression(w), n))
-
-  /** Declarative reference formulation of [[wordNGramsOf]] (spec-only):
-    * try_element_at → NULL past the end, and `concat` (null-propagating,
-    * unlike concat_ws). */
-  private[graft] def wordNGramsHof(w: Column, n: Int): Column =
-    transform(
-      sequence(lit(1), greatest(size(w) - (n - 1), lit(1))),
-      i => concat((0 until n).flatMap { o =>
-        val el = try_element_at(w, i + lit(o))
-        if (o == 0) Seq(el) else Seq(lit(" "), el)
-      }: _*))
-
   /** Word n-grams of lower(text). Convenience for small inputs/tests —
     * hot paths bind the split array first (see class doc). */
   def wordNGrams(text: Column, n: Int): Column =

@@ -470,11 +470,42 @@ class MainSpec extends SparkSpec {
     val cli = spark.read.parquet(out)
     assert(cli.count() > 0)
     assert(cli.exceptAll(api).isEmpty && api.exceptAll(cli).isEmpty)
-    // append refuses the staged-contract knob
+    // append and query refuse the staged-contract knob
     intercept[IllegalArgumentException] {
       Main.run(Seq("-index", writeCfg(tmp("graft-cli-bmcfg4"),
         s"""{"source":"$root","namespace":"db.half2","index":"$idx",
            |"kind":"bm25","action":"append","buckets":16}""".stripMargin)), sess)
+    }
+    val e = intercept[IllegalArgumentException] {
+      Main.run(Seq("-index", writeCfg(tmp("graft-cli-bmcfg5"),
+        s"""{"source":"$root","namespace":"db.corpus","index":"$idx",
+           |"kind":"bm25","action":"query","queries":"db.q",
+           |"buckets":16}""".stripMargin)), sess)
+    }
+    assert(e.getMessage.contains("only 'build' takes it"), e.getMessage)
+  }
+
+  test("-index: every kind refuses its build knobs off build; unknown actions list the kind's verbs") {
+    val root = tmp("graft-cli-knobsrc")
+    // never built: the refusals fire before anything is read
+    val idx = tmp("graft-cli-knobix") + "/ix"
+    def run(kind: String, action: String, extra: String): IllegalArgumentException =
+      intercept[IllegalArgumentException] {
+        Main.run(Seq("-index", writeCfg(tmp("graft-cli-knobcfg"),
+          s"""{"source":"$root","namespace":"db.none","index":"$idx",
+             |"kind":"$kind","action":"$action"$extra}""".stripMargin)), sess)
+      }
+    for (e <- graft.streaming.StagedKinds.all) {
+      for (knob <- e.buildKnobs; action <- Seq("append", "query")) {
+        val err = run(e.cli, action, s""","$knob":1""")
+        assert(err.getMessage.contains(s"${e.cli} config has '$knob'"),
+          s"${e.cli} $action $knob: ${err.getMessage}")
+      }
+      val listed = run(e.cli, "rebuild", "").getMessage
+        .split("[(|)]").map(_.trim).toSet
+      assert(listed.contains("reap") == e.ivf.nonEmpty, listed)
+      assert(listed.contains("admit") == e.admit.nonEmpty, listed)
+      assert(e.extra.keys.forall(listed), listed)
     }
   }
 

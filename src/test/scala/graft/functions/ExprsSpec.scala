@@ -82,7 +82,7 @@ class ExprsSpec extends SparkSpec {
 
   test("CharShingles matches the transform/substring HOF") {
     for (k <- Seq(1, 5, 12)) {
-      assertSame(texts, Shingles.charShinglesOf($"t", k), Shingles.charShinglesHof($"t", k))
+      assertSame(texts, Shingles.charShinglesOf($"t", k), TextOracles.charShinglesHof($"t", k))
     }
   }
 
@@ -94,7 +94,7 @@ class ExprsSpec extends SparkSpec {
   test("WordNGrams matches the try_element_at/concat HOF") {
     val words = texts.select(split($"t", "\\s+").as("w"))
     for (n <- Seq(1, 2, 5)) {
-      assertSame(words, Shingles.wordNGramsOf($"w", n), Shingles.wordNGramsHof($"w", n))
+      assertSame(words, Shingles.wordNGramsOf($"w", n), TextOracles.wordNGramsHof($"w", n))
     }
   }
 
@@ -107,7 +107,7 @@ class ExprsSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("w",
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, true)))))
-    assertSame(wn, Shingles.wordNGramsOf($"w", 2), Shingles.wordNGramsHof($"w", 2))
+    assertSame(wn, Shingles.wordNGramsOf($"w", 2), TextOracles.wordNGramsHof($"w", 2))
   }
 
   test("SortedPairs: distinct a<b pairs, nulls ignored, strings ordered") {
@@ -134,9 +134,9 @@ class ExprsSpec extends SparkSpec {
   test("shingles match HOFs on real documents") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(substring(lower($"text"), 1, Shingles.MaxChars).as("t"))
-    assertSame(docs, Shingles.charShinglesOf($"t", 12), Shingles.charShinglesHof($"t", 12))
+    assertSame(docs, Shingles.charShinglesOf($"t", 12), TextOracles.charShinglesHof($"t", 12))
     val words = docs.select(split($"t", "\\s+").as("w"))
-    assertSame(words, Shingles.wordNGramsOf($"w", 3), Shingles.wordNGramsHof($"w", 3))
+    assertSame(words, Shingles.wordNGramsOf($"w", 3), TextOracles.wordNGramsHof($"w", 3))
   }
 
   test("ShingleStats narrow fingerprint equals the exploded aggregate plan") {
@@ -151,7 +151,7 @@ class ExprsSpec extends SparkSpec {
         (900004L, null.asInstanceOf[String])).toDF("doc_id", "text"))
     val narrow = TextFunctions.fingerprint(docs, "doc_id", $"text")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val exploded = TextFunctions.fingerprintExploded(docs, "doc_id", $"text")
+    val exploded = TextOracles.fingerprintExploded(docs, "doc_id", $"text")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(narrow == exploded && narrow.nonEmpty)
     assert(!narrow.exists(_._1 == 900004L)) // NULL text contributes nothing

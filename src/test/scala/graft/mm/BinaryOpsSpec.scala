@@ -28,7 +28,7 @@ class BinaryOpsSpec extends SparkSpec {
       toDF("doc_id", "payload"))
     val both = withEdge.select(col("doc_id"),
       BinaryOps.cdcBoundariesCol(col("payload")).as("nat"),
-      BinaryOps.cdcBoundariesDeclarative(col("payload")).as("dec"))
+      BinaryOracles.cdcBoundariesDeclarative(col("payload")).as("dec"))
     assert(both.where(not(col("nat") <=> col("dec"))).count() == 0)
     // real docs actually produce boundaries (the rule isn't degenerate)
     assert(both.filter(size(col("nat")) > 0).count() > 0)

@@ -24,6 +24,17 @@ class StagedKindsSpec extends AnyFunSuite {
     }
   }
 
+  test("CLI names are unique and cover the six kinds; every entry builds and queries") {
+    val clis = StagedKinds.all.map(_.cli)
+    assert(clis.distinct == clis, "one CLI name per kind")
+    assert(clis.toSet == Set("ivfpq", "flat", "census", "bm25", "lsh", "fp"))
+    StagedKinds.all.foreach { e =>
+      assert(e.build != null && e.query != null, e.kind)
+      assert(StagedKinds.cli(e.cli) == e)
+    }
+    intercept[IllegalArgumentException](StagedKinds.cli("no_such_kind"))
+  }
+
   test("the IVF kinds, and only they, carry a generation layout") {
     val ivf = StagedKinds.all.filter(_.ivf.nonEmpty)
     assert(ivf.map(_.kind).toSet ==

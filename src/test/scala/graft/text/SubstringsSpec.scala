@@ -48,11 +48,11 @@ class SubstringsSpec extends SparkSpec {
   test("gramRows native expression == declarative twin") {
     val df = spark.read.parquet(s"$sf0001/documents.parquet").limit(60)
     val a = Substrings.gramRows(df, "doc_id", col("text"), k = 17)
-    val b = Substrings.gramRowsDeclarative(df, "doc_id", col("text"), k = 17)
+    val b = TextOracles.gramRowsDeclarative(df, "doc_id", col("text"), k = 17)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     // and the cap truncates identically
     val ac = Substrings.gramRows(df, "doc_id", col("text"), 17, maxChars = 100)
-    val bc = Substrings.gramRowsDeclarative(df, "doc_id", col("text"), 17, maxChars = 100)
+    val bc = TextOracles.gramRowsDeclarative(df, "doc_id", col("text"), 17, maxChars = 100)
     assert(ac.exceptAll(bc).isEmpty && bc.exceptAll(ac).isEmpty)
   }
 

@@ -25,6 +25,47 @@ object TextOracles {
         .cast("long").as("simhash"))
   }
 
+
+  /** Declarative explode+aggregate formulation of
+    * [[TextFunctions.fingerprint]] (spec-only equivalence twin). */
+  def fingerprintExploded(df: DataFrame, idCol: String,
+      text: Column, k: Int = 12): DataFrame =
+    df.select(col(idCol),
+        substring(lower(text), 1, Shingles.MaxChars).as("__t"))
+      .select(col(idCol), explode(Shingles.charShinglesOf(col("__t"), k)).as("s"))
+      .groupBy(col(idCol))
+      .agg(min(md5(col("s"))).as("fingerprint"),
+        countDistinct(col("s")).as("n_shingles"))
+
+  /** Declarative reference formulation of [[Shingles.charShinglesOf]]. */
+  def charShinglesHof(t: Column, k: Int): Column =
+    transform(
+      sequence(lit(1), greatest(length(t) - (k - 1), lit(1))),
+      i => substring(t, i, lit(k)))
+
+  /** Declarative reference formulation of [[Shingles.wordNGramsOf]]:
+    * try_element_at → NULL past the end, and `concat` (null-propagating,
+    * unlike concat_ws). */
+  def wordNGramsHof(w: Column, n: Int): Column =
+    transform(
+      sequence(lit(1), greatest(size(w) - (n - 1), lit(1))),
+      i => concat((0 until n).flatMap { o =>
+        val el = try_element_at(w, i + lit(o))
+        if (o == 0) Seq(el) else Seq(lit(" "), el)
+      }: _*))
+
+  /** Declarative twin of [[Substrings.gramRows]]' native expression —
+    * pinned equal by SubstringsSpec; the formulation the DuckDB oracle
+    * mirrors. */
+  def gramRowsDeclarative(df: DataFrame, idCol: String,
+      text: Column, k: Int, maxChars: Int = 0): DataFrame = {
+    val t = Substrings.capped(text, maxChars)
+    df.filter(text.isNotNull && length(t) >= k)
+      .select(col(idCol), explode(sequence(lit(1), length(t) - (k - 1))).as("p"),
+        t.as("__t"))
+      .select(col(idCol), col("p"), md5(col("__t").substr(col("p"), lit(k))).as("h"))
+  }
+
   /** Declarative twin of [[Substrings.winnowRows]] — the bounded
     * nearest-smaller-rank formulation the DuckDB oracle mirrors
     * (rank = (h, p); a position is selected iff some full window of G
@@ -33,7 +74,7 @@ object TextOracles {
   def winnowRowsDeclarative(df: DataFrame, idCol: String, text: Column,
       k: Int, guarantee: Int, maxChars: Int = 0): DataFrame = {
     val G = guarantee - k + 1
-    val g = Substrings.gramRowsDeclarative(df, idCol, text, k, maxChars)
+    val g = gramRowsDeclarative(df, idCol, text, k, maxChars)
       .withColumn("__L", count(lit(1)).over(Window.partitionBy(col(idCol))))
     val a = g.select(col(idCol).as("__id"), col("p").as("__pa"),
       col("h").as("__ha"), col("__L"))
