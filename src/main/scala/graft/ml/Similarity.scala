@@ -751,7 +751,7 @@ object Similarity {
     * QUERY-INVISIBLE, the manifest stays valid throughout; its
     * `n_vectors` count refreshes to the true row count (appends leave
     * it at the last full stage by design). Crash-safe layout swap via
-    * [[graft.util.DirSwap]]; single writer per index. */
+    * [[graft.util.DirCommit]]; single writer per index. */
   def compactIvfPq(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     import graft.util.StagedIndex.Layout

@@ -3,8 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-
-import java.nio.charset.StandardCharsets
+import graft.util.DirCommit
 
 /** Source/Sink/Catalog SPI (SURVEY §7.1-2).
   *
@@ -87,21 +86,16 @@ trait Catalog {
   * partition pruning. Size B so one bucket ≈ one comfortable task
   * (e.g. 100 TB / 256 MB ≈ 4·10⁵ buckets).
   *
-  * == Commit protocol (crash-safe, marker atomic with data) ==
+  * == Commit ==
   *
-  * A merge publishes through: stage data + marker + metadata files →
-  * write the `_graft_commit` sentinel LAST → rename live aside
-  * (`p → p.__old__`) → move untouched bucket dirs aside→staging →
-  * rename staging into place → delete the aside dir. Every step is
-  * idempotent-resumable, and [[recover]] (run before any read/merge)
-  * rolls an interrupted commit FORWARD when the sentinel proves the
-  * staging dir complete, or BACK (discard staging) when it doesn't —
-  * so a crash anywhere leaves the table either fully pre-merge (marker
-  * absent ⇒ the micro-batch replays) or fully post-merge (marker
-  * present ⇒ the replay is skipped): exactly-once either way. The
-  * earlier delete-then-rename publish could lose the table to a crash
-  * between the two steps. Single writer per table assumed (the
-  * migrator owns its target), as in the reference. */
+  * Every merge publishes through [[graft.util.DirCommit]]: the merged
+  * data, the marker and the `_graft_count` file are staged, sealed and
+  * published together (untouched buckets carried by rename), and every
+  * read or merge first recovers an interrupted commit. A crash anywhere
+  * leaves the table either fully pre-merge (marker absent ⇒ the
+  * micro-batch replays) or fully post-merge (marker present ⇒ the replay
+  * is skipped): exactly-once either way. Single writer per table
+  * assumed (the migrator owns its target), as in the reference. */
 final class ParquetCatalog(
     val spark: SparkSession,
     val dir: String,
@@ -118,13 +112,7 @@ final class ParquetCatalog(
     if (ns.contains('.')) ns.substring(ns.indexOf('.') + 1) else ns
 
   private def path(ns: String): Path = new Path(root, s"${table(ns)}.parquet")
-  private def stagingPath(ns: String): Path = new Path(root, s"${table(ns)}.parquet.__staging__")
-  private def asidePath(ns: String): Path = new Path(root, s"${table(ns)}.parquet.__old__")
-  // canonical JVM-wide coordination key: same directory + table ⇒ same
-  // lock, whichever catalog instance (or db alias or path spelling) is
-  // in hand
-  private def coordKey(ns: String): String =
-    fs.makeQualified(path(ns)).toString
+  private def recover(ns: String): Unit = DirCommit.recover(fs, path(ns))
 
   override def listNamespaces(): Seq[String] = {
     if (!fs.exists(root)) return Nil
@@ -161,30 +149,18 @@ final class ParquetCatalog(
     * of the written table; the bucketed path tracks the table total
     * incrementally in a `_graft_count` metadata file. */
   override def merge(ns: String, upserts: DataFrame, deletes: DataFrame, key: String,
-      marker: Option[(String, String)] = None): Long = {
-    val ck = coordKey(ns)
-    // entry critical section: recover leftovers, clear genuinely-stale
-    // staging, and raise the live-merge flag — atomically with respect
-    // to any concurrent reader's recover. The long staging write itself
-    // runs OUTSIDE the lock; the flag is what keeps readers' recovery
-    // hands off the in-flight staging/commit until the finally below.
-    ParquetCatalog.lockFor(ck).synchronized {
-      recover(ns)
-      fs.delete(stagingPath(ns), true): Unit // stale staging from an abandoned run
-      ParquetCatalog.liveMerges.add(ck): Unit
+      marker: Option[(String, String)] = None): Long =
+    DirCommit.run(fs, path(ns)) { st =>
+      val (n, touched) =
+        if (buckets > 0) mergeBucketed(ns, st, upserts, deletes, key)
+        else (mergePlain(ns, st, upserts, deletes, key), None)
+      val meta = marker.map { case (name, value) => s"_graft_$name" -> value }.toSeq :+
+        (CountFile -> n.toString)
+      DirCommit.Staged(n, meta, touched)
     }
-    try {
-      val n =
-        if (buckets > 0) mergeBucketed(ns, upserts, deletes, key, marker)
-        else mergePlain(ns, upserts, deletes, key, marker)
-      commit(ns)
-      n
-    } finally { ParquetCatalog.liveMerges.remove(ck): Unit }
-  }
 
-  private def mergePlain(ns: String, upserts: DataFrame, deletes: DataFrame,
-      key: String, marker: Option[(String, String)]): Long = {
-    val st = stagingPath(ns)
+  private def mergePlain(ns: String, st: Path, upserts: DataFrame, deletes: DataFrame,
+      key: String): Long = {
     val touched = upserts.select(col(key)).unionByName(deletes.select(col(key))).distinct()
     val merged =
       if (!dataExists(ns)) upserts
@@ -196,15 +172,13 @@ final class ParquetCatalog(
       // row-group min/max stats that prune point and range reads
       .sortWithinPartitions(col(key))
       .write.mode("overwrite").parquet(st.toString)
-    val n = obs.get("rows").asInstanceOf[Long]
-    finishStaging(ns, st, touchedBuckets = None, total = n, marker)
-    n
+    obs.get("rows").asInstanceOf[Long]
   }
 
-  private def mergeBucketed(ns: String, upserts: DataFrame, deletes: DataFrame,
-      key: String, marker: Option[(String, String)]): Long = {
+  /** The new total and the rewritten bucket ids (None: full write). */
+  private def mergeBucketed(ns: String, st: Path, upserts: DataFrame, deletes: DataFrame,
+      key: String): (Long, Option[Set[String]]) = {
     val p = path(ns)
-    val st = stagingPath(ns)
     val bucketOf = pmod(xxhash64(col(key)), lit(buckets.toLong)).cast("int")
     val exists = dataExists(ns)
     val bucketedLayout = exists && fs.listStatus(p)
@@ -226,7 +200,7 @@ final class ParquetCatalog(
             .collect().map(_.getInt(0)).sorted
           val pruned = spark.read.parquet(p.toString)
             .filter(col(BucketCol).isin(tb.toIndexedSeq: _*))
-          (Some(pruned), Some(tb.toSeq))
+          (Some(pruned), Some(tb.map(_.toString).toSet))
         }
       val merged = current match {
         case None => up
@@ -250,139 +224,23 @@ final class ParquetCatalog(
           val oldTouched = curObs.get("rows").asInstanceOf[Long]
           // pre-merge total: maintained incrementally; a bucketed table
           // without the metadata file (external writer) pays one scan
-          val oldTotal = readMeta(new Path(p, CountFile)).map(_.toLong)
+          val oldTotal = DirCommit.readFile(fs, new Path(p, CountFile)).map(_.toLong)
             .getOrElse(read(ns).count())
           oldTotal - oldTouched + newTouched
       }
-      finishStaging(ns, st, touchedList, total, marker)
-      total
+      (total, touchedList)
     } finally { touchedKeys.unpersist(false); () }
   }
 
-  /** Stage metadata: marker, touched-bucket list, incremental row count,
-    * then the sentinel LAST — its presence proves the staging dir
-    * complete, which is what licenses roll-forward in [[recover]]. */
-  private def finishStaging(ns: String, st: Path, touchedBuckets: Option[Seq[Int]],
-      total: Long, marker: Option[(String, String)]): Unit = {
-    if (!fs.exists(st)) fs.mkdirs(st): Unit // empty merge result still commits
-    marker.foreach { case (name, value) => writeMeta(new Path(st, s"_graft_$name"), value) }
-    writeMeta(new Path(st, TouchedFile), touchedBuckets.map(_.mkString(",")).getOrElse("*"))
-    writeMeta(new Path(st, CountFile), total.toString)
-    writeMeta(new Path(st, Sentinel), "")
-  }
-
-  /** Test-only failpoint: name a commit step to die after (specs use it
-    * to pin [[recover]] against every mid-commit crash state). */
-  private[sources] var crashPoint: String = ""
-  private def maybeCrash(point: String): Unit =
-    if (crashPoint == point) throw new IllegalStateException(s"injected crash at $point")
-
-  /** Publish a complete staging dir (sentinel present). Resumable from
-    * any crash point — see [[recover]]. */
-  private def commit(ns: String): Unit = {
-    val p = path(ns); val st = stagingPath(ns); val aside = asidePath(ns)
-    if (fs.exists(p))
-      require(fs.rename(p, aside), s"failed to move $p aside")
-    maybeCrash("after-aside")
-    carryUntouched(st, aside)
-    maybeCrash("after-carry")
-    require(fs.rename(st, p), s"failed to publish staging into $p")
-    maybeCrash("after-publish")
-    fs.delete(aside, true): Unit
-  }
-
-  /** Move every untouched bucket dir of the aside (pre-merge) table into
-    * staging — metadata-only renames, no data I/O. A touched bucket is
-    * NEVER moved even when absent from staging: absence there means the
-    * merge emptied it. Idempotent (skips already-moved dirs) so an
-    * interrupted carry simply re-runs. */
-  private def carryUntouched(st: Path, aside: Path): Unit = {
-    if (!fs.exists(aside)) return
-    readMeta(new Path(st, TouchedFile)) match {
-      case Some("*") | None => // full table in staging: nothing to carry
-      case Some(list) =>
-        val touched = list.split(',').filter(_.nonEmpty).toSet
-        fs.listStatus(aside).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith(BucketCol + "="))
-          .foreach { s =>
-            val name = s.getPath.getName
-            val id = name.stripPrefix(BucketCol + "=")
-            if (!touched.contains(id) && !fs.exists(new Path(st, name)))
-              require(fs.rename(s.getPath, new Path(st, name)),
-                s"failed to carry bucket $name")
-          }
-    }
-  }
-
-  /** Crash recovery, run before any read or merge. Rolls an interrupted
-    * commit FORWARD when staging carries the sentinel and the live dir
-    * was already moved aside (the batch's data+marker are complete), and
-    * BACK otherwise (incomplete staging is discarded; the batch replays
-    * against the intact pre-merge table). */
-  private def recover(ns: String): Unit = {
-    val ck = coordKey(ns)
-    val l = ParquetCatalog.lockFor(ck)
-    // a merge on this table is in flight IN THIS JVM: its staging dir is
-    // live work, not a crash leftover — recovery must not touch anything
-    // (deleting "stale" staging here is exactly the read-vs-write race
-    // that kills the writer's tasks). The writer owns the state machine
-    // until its finally clears the flag.
-    if (!ParquetCatalog.liveMerges.contains(ck)) {
-      l.synchronized {
-        if (!ParquetCatalog.liveMerges.contains(ck)) recoverLocked(ns)
-      }
-    }
-  }
-
-  /** The actual recovery state machine — callers hold the ns lock. */
-  private def recoverLocked(ns: String): Unit = {
-    val p = path(ns); val st = stagingPath(ns); val aside = asidePath(ns)
-    val stComplete = fs.exists(new Path(st, Sentinel))
-    if (fs.exists(aside)) {
-      if (stComplete) commit(ns) // aside exists ⇒ live was moved: roll forward
-      else if (!fs.exists(p)) {
-        // inconsistent leftovers without a provably-complete staging:
-        // restore the pre-merge table
-        fs.delete(st, true): Unit
-        require(fs.rename(aside, p), s"failed to restore $p from $aside")
-      } else fs.delete(aside, true): Unit // publish finished; aside is garbage
-    } else if (stComplete && !fs.exists(p)) {
-      // first-ever merge crashed between sentinel and publish
-      commit(ns)
-    } else if (fs.exists(st) && !stComplete) {
-      fs.delete(st, true): Unit // died while staging: discard
-    }
-    // remaining case: staging complete but live intact and no aside —
-    // the commit never started, the marker was never published; leave the
-    // staging dir for the next merge to clear and redo (roll back)
-  }
-
-  private def writeMeta(f: Path, value: String): Unit = {
-    val out = fs.create(f, true)
-    try out.write(value.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private def readMeta(f: Path): Option[String] =
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
-      finally in.close()
-    }
-
   override def readMarker(ns: String, name: String): Option[String] = {
     recover(ns)
-    readMeta(new Path(path(ns), s"_graft_$name"))
+    DirCommit.readFile(fs, new Path(path(ns), s"_graft_$name"))
   }
 
   override def keyOf(ns: String): String =
     keys.getOrElse(table(ns), graft.Tables.keys.getOrElse(table(ns), "_id"))
 
-  override def drop(ns: String): Unit = {
-    fs.delete(path(ns), true): Unit
-    fs.delete(stagingPath(ns), true): Unit
-    fs.delete(asidePath(ns), true): Unit
-  }
+  override def drop(ns: String): Unit = DirCommit.drop(fs, path(ns))
 
   override def dataExists(ns: String): Boolean = {
     recover(ns)
@@ -396,34 +254,7 @@ object ParquetCatalog {
     * index treats `_`/`.`-prefixed paths as hidden, which would hide the
     * bucket partition dirs from every read. */
   val BucketCol = "graft_bucket"
-  private val Sentinel = "_graft_commit"
-  private val TouchedFile = "_graft_touched"
   private val CountFile = "_graft_count"
-
-  /** JVM-wide per-(root, table) coordination — shared across ALL catalog
-    * instances over the same directory (the streaming writer, a status
-    * reader, a compare job, and a test's poll loop each construct their
-    * own instance). Two jobs:
-    *
-    *  - `nsLocks` serializes [[ParquetCatalog.recover]] mutations and
-    *    the merge-entry critical section, so two readers can't both
-    *    roll a crashed commit forward (racing renames);
-    *  - `liveMerges` marks a merge in flight, so a READER's recover
-    *    cannot mistake the writer's in-progress staging dir (sentinel
-    *    not yet written) for a crashed one and delete it out from under
-    *    the running write job — the race that killed a live tail under
-    *    concurrent read load.
-    *
-    * Cross-PROCESS crash recovery is untouched: a fresh JVM starts with
-    * an empty `liveMerges`, so genuine leftovers recover on first
-    * access. Concurrent writers from DIFFERENT processes to one table
-    * remain unsupported (single-writer catalogs, reference semantics);
-    * concurrent readers in other processes should treat transient read
-    * failures during a commit as retryable, as all graft readers do. */
-  private val nsLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private val liveMerges = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def lockFor(key: String): Object =
-    nsLocks.computeIfAbsent(key, _ => new Object)
 }
 
 /** Multi-database parquet catalog — S5's full shape: one subdirectory

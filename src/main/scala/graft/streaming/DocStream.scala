@@ -272,8 +272,9 @@ object DocStream {
     * read-only probe never grows the index, so the knob would be
     * silently meaningless. Census compaction is probe-invisible because
     * readers sum `n` and sum is associative (DocStreamSpec pins output
-    * equality across cadences), and crash-safe ([[graft.util.DirSwap]]
-    * — an interrupted swap rolls back on the next compaction). */
+    * equality across cadences), and crash-safe ([[graft.util.DirCommit]]
+    * — the next probe's validate finishes or undoes an interrupted
+    * swap). */
   def curateStreamAgainstIndex(docs: DataFrame, idCol: String,
       textName: String, timeCol: String, watermark: String,
       indexDir: String, outPath: String, checkpointDir: String,

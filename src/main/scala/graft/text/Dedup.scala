@@ -822,7 +822,7 @@ object Dedup {
   /** COMPACT a [[stageBandIndex]] index after appends: one file per
     * bucket again, manifest count refreshed. Band rows are immutable
     * per-(doc, band) facts, so compaction is a pure file consolidation —
-    * probe-invisible; crash-safe swap via [[graft.util.DirSwap]]. */
+    * probe-invisible; crash-safe swap via [[graft.util.DirCommit]]. */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     import graft.util.StagedIndex.Layout
@@ -1103,7 +1103,7 @@ object Dedup {
     * hash rows (re-appended or cross-append repeats) collapse to one,
     * one file per bucket again, manifest count refreshed to the
     * DISTINCT fingerprint count. Probe-invisible (the probe is a
-    * semi-join); crash-safe swap via [[graft.util.DirSwap]]. */
+    * semi-join); crash-safe swap via [[graft.util.DirCommit]]. */
   def compactFingerprints(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     import graft.util.StagedIndex.Layout

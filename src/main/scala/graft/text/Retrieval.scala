@@ -367,8 +367,9 @@ object Retrieval {
     * discipline as [[graft.text.Substrings.compactCensus]]: compaction
     * is QUERY-INVISIBLE (queries already sum df and derive stats from
     * dl), the manifest stays valid throughout, and each sublayout swap
-    * is crash-safe ([[graft.util.DirSwap]] — re-run to recover; a crash
-    * between sublayout swaps leaves a valid mixed-compaction index). */
+    * is crash-safe ([[graft.util.DirCommit]] — the next probe's
+    * validate finishes or undoes it; a crash between sublayout swaps
+    * leaves a valid mixed-compaction index). */
   def compactBm25(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     import graft.util.StagedIndex.Layout

@@ -621,9 +621,10 @@ object Substrings {
     * valid throughout — only its `n_grams` count (and the stats
     * frame) refresh to the distinct-hash count, which appends leave
     * stale by design. Mode-agnostic: exact and anchored censuses share
-    * the (h, n, bkt) layout. The layout swap is crash-safe
-    * ([[graft.util.DirSwap]] — re-run to recover); single writer per
-    * index, as with stage/append. */
+    * the (h, n, bkt) layout. Each sublayout swap is one
+    * [[graft.util.DirCommit]], which the next probe's validate finishes
+    * or undoes after a crash; single writer per index, as with
+    * stage/append. */
   def compactCensus(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     import graft.util.StagedIndex.Layout
@@ -637,7 +638,7 @@ object Substrings {
             .observe(obs, count(lit(1)).as("n_grams"))
             .select(col("h"), col("n"), col("bkt"))), // layout column order
         // stats refreshes INSIDE the compact bracket, as its own
-        // crash-safe DirSwap sublayout BEFORE the manifest count
+        // crash-safe sublayout commit BEFORE the manifest count
         // refresh: a plain overwrite after the bracket (the previous
         // shape) left two windows — a crash between the manifest write
         // and the stats rewrite pinned n_grams disagreeing between the
@@ -675,10 +676,12 @@ object Substrings {
     * The bucket count is part of the probe CONTRACT (like `k` and
     * `guarantee`): rows probed under a count other than the one they
     * were bucketed with are silently MISSED, so this is a STAGE-grade
-    * commit, not a compact — the re-aggregated layout lands fully in a
-    * temp dir under a still-valid manifest (crash there: live index
-    * untouched), then the manifest is dropped, census and stats swap,
-    * and the manifest is rewritten with the new count: every crash
+    * commit, not a compact — the re-aggregated census and stats land
+    * fully in their [[graft.util.DirCommit]] stagings under a
+    * still-valid manifest (crash there: live index untouched, the
+    * unsealed stagings discarded on the next open), then the manifest
+    * is dropped, both commits publish, and the manifest is rewritten
+    * with the new count: every crash
     * window inside the commit reads loudly as "not a graft index"
     * (recovery = restage from the corpus), never as a silently
     * mis-pruning index. Explicit-verb-only by design — the streaming
@@ -698,38 +701,37 @@ object Substrings {
     if (newBuckets == mf.paramInt("buckets")) return newBuckets
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val ctmp = new Path(dir, "census.__rebucket__")
-    val stmp = new Path(dir, "stats.__rebucket__")
-    fs.delete(ctmp, true): Unit
-    fs.delete(stmp, true): Unit
-    // full rewrites land in temp dirs FIRST, under a still-valid
-    // manifest — the slow window is crash-free for the live index
-    val obs = org.apache.spark.sql.Observation()
-    old.groupBy(col("h")).agg(sum(col("n")).as("n"))
-      .observe(obs, count(lit(1)).as("n_grams"))
-      .withColumn("bkt", pmod(xxhash64(col("h")), lit(newBuckets.toLong)))
-      .repartition(col("bkt")) // one file per bucket
-      .write.mode("overwrite").partitionBy("bkt").parquet(ctmp.toString)
-    val nGrams = obs.get("n_grams").asInstanceOf[Long]
-    val nDocs = mf.counts.getOrElse("n_docs", 0L)
-    import spark.implicits._
-    Seq((mf.paramInt("k"), newBuckets.toLong, nGrams, nDocs))
-      .toDF("k", "buckets", "n_grams", "n_docs")
-      .coalesce(1).write.mode("overwrite").parquet(stmp.toString)
-    // commit bracket: manifest dropped, two swaps, manifest rewritten
-    // with the new bucket count
-    graft.util.StagedIndex.stage(spark, dir,
-        graft.util.IndexManifest.KindGramCensus,
-        mf.params + ("buckets" -> newBuckets.toString)) {
-      def publish(name: String, tmp: Path): Unit = {
-        fs.delete(new Path(dir, name), true): Unit
-        require(fs.rename(tmp, new Path(dir, name)),
-          s"rebucket failed to publish $tmp into $dir/$name")
+    val census = graft.util.DirCommit.begin(fs, new Path(dir, "census"))
+    val stats = graft.util.DirCommit.begin(fs, new Path(dir, "stats"))
+    try {
+      // full rewrites land in staging FIRST, under a still-valid
+      // manifest — the slow window is crash-free for the live index
+      val obs = org.apache.spark.sql.Observation()
+      census.write { st =>
+        old.groupBy(col("h")).agg(sum(col("n")).as("n"))
+          .observe(obs, count(lit(1)).as("n_grams"))
+          .withColumn("bkt", pmod(xxhash64(col("h")), lit(newBuckets.toLong)))
+          .repartition(col("bkt")) // one file per bucket
+          .write.mode("overwrite").partitionBy("bkt").parquet(st.toString)
       }
-      publish("census", ctmp)
-      publish("stats", stmp)
-      Map("n_docs" -> nDocs, "n_grams" -> nGrams)
-    }
+      val nGrams = obs.get("n_grams").asInstanceOf[Long]
+      val nDocs = mf.counts.getOrElse("n_docs", 0L)
+      import spark.implicits._
+      stats.write { st =>
+        Seq((mf.paramInt("k"), newBuckets.toLong, nGrams, nDocs))
+          .toDF("k", "buckets", "n_grams", "n_docs")
+          .coalesce(1).write.mode("overwrite").parquet(st.toString)
+      }
+      // commit bracket: manifest dropped, both layouts committed,
+      // manifest rewritten with the new bucket count
+      graft.util.StagedIndex.stage(spark, dir,
+          graft.util.IndexManifest.KindGramCensus,
+          mf.params + ("buckets" -> newBuckets.toString)) {
+        census.commit()
+        stats.commit()
+        Map("n_docs" -> nDocs, "n_grams" -> nGrams)
+      }
+    } finally { census.close(); stats.close() }
     newBuckets
   }
 

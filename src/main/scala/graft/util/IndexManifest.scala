@@ -156,43 +156,22 @@ object IndexManifest {
     mf
   }
 
-  /** [[validate]] minus the stranded-swap scan — the COMPACTION entry
-    * point: compaction is the recovery verb for an interrupted swap
-    * ([[DirSwap.replace]] rolls the old layout back before rewriting),
-    * so it must stay reachable in exactly the state [[validate]]
-    * refuses. */
-  def validateKind(spark: SparkSession, dir: String,
-      kind: String): IndexManifest = {
+  /** Read + check kind and any expected params — every append, probe
+    * and compaction calls this before touching the layout, so a
+    * mismatched directory fails with WHAT is wrong, not a downstream
+    * schema error. With `stranded` it also finishes or undoes a
+    * [[DirCommit]] that died between its renames with a layout missing,
+    * so the probe that follows reads a complete layout (one root
+    * listing); compaction skips it, as its commits recover on entry. */
+  def validate(spark: SparkSession, dir: String, kind: String,
+      expect: Map[String, String] = Map.empty,
+      stranded: Boolean = true): IndexManifest = {
     val mf = read(spark, dir)
     require(mf.kind == kind,
       s"$dir is a '${mf.kind}' index, not '$kind'")
-    mf
-  }
-
-  /** Read + check kind and any expected params — every append/probe
-    * entry point calls this before touching the layout, so a mismatched
-    * directory fails with WHAT is wrong, not a downstream schema
-    * error. */
-  def validate(spark: SparkSession, dir: String, kind: String,
-      expect: Map[String, String] = Map.empty): IndexManifest = {
-    val mf = validateKind(spark, dir, kind)
-    // an interrupted compaction swap ([[DirSwap]]: live renamed aside,
-    // crash before the compacted layout moved in) leaves <name>.__old__
-    // with NO live <name> — the manifest is still valid, so a probe
-    // would otherwise surface a raw FileNotFound on the sublayout.
-    // Detect it here, where the failure would be seen, and name the
-    // recovery verb (one root listing — index roots hold a handful of
-    // children).
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stranded = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.endsWith(".__old__"))
-      .filter(n => !fs.exists(new Path(dir, n.stripSuffix(".__old__"))))
-    require(stranded.isEmpty,
-      s"$dir has an interrupted compaction swap (${stranded.mkString(", ")} " +
-        "present with no live layout) — re-run compaction (`-index " +
-        "action=compact`, or the compactCensus/compactBm25/compactIvfPq " +
-        "call) to roll the old layout back and redo the swap")
+    if (stranded) DirCommit.recoverUnder(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, strandedOnly = true)
     val bad = expect.filter { case (k, v) => !mf.params.get(k).contains(v) }
     require(bad.isEmpty,
       s"$dir ($kind) params mismatch: expected " +

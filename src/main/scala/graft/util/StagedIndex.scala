@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -19,11 +20,12 @@ import org.apache.spark.sql.functions.col
   *    aggregate invariants (split tf rows, duplicated codes, a
   *    double-counted bucket census), so the refusal is uniform and the
   *    kind supplies only its consequence sentence;
-  *  - '''compact''' is validateKind + one crash-safe [[DirSwap]] per
-  *    sublayout + a manifest count refresh ([[compact]]): compaction
-  *    is the RECOVERY verb for an interrupted swap, so it validates
-  *    kind-only and must stay reachable in exactly the stranded state
-  *    [[IndexManifest.validate]] refuses.
+  *  - '''compact''' is validate + one [[DirCommit]] per sublayout +
+  *    a manifest count refresh ([[compact]]); the old and new layouts
+  *    are probe-identical, so the manifest stays valid throughout. A
+  *    swap a crash interrupted is finished or undone by the next
+  *    [[IndexManifest.validate]] when it left a layout missing, and by
+  *    the next compaction's commit otherwise.
   */
 object StagedIndex {
 
@@ -45,6 +47,11 @@ object StagedIndex {
   def stage(spark: SparkSession, dir: String, kind: String,
       params: Map[String, String])(body: => Map[String, Long]): Unit = {
     IndexManifest.invalidate(spark, dir)
+    // settle interrupted commits first: a sealed staging left by an
+    // earlier compaction must not roll forward over this stage's layout
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root)) DirCommit.recoverUnder(fs, root)
     val counts = body
     IndexManifest.write(spark, dir, kind, params, counts)
   }
@@ -111,9 +118,9 @@ object StagedIndex {
       emptySchema: org.apache.spark.sql.types.StructType,
       dataSchema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasDataFile(d: org.apache.hadoop.fs.Path): Boolean =
+    def hasDataFile(d: Path): Boolean =
       fs.listStatus(d).exists { s =>
         val n = s.getPath.getName
         !n.startsWith("_") && !n.startsWith(".") &&
@@ -126,10 +133,9 @@ object StagedIndex {
     else spark.read.schema(emptySchema).parquet(path)
   }
 
-  /** Compact bracket: validate kind-only (see class doc), swap each
-    * sublayout crash-safely ([[DirSwap.replace]]) through its
-    * consolidation with ONE file per partition restored, then refresh
-    * the manifest counts. `layouts` and `counts` both take the
+  /** Compact bracket: validate (see class doc), commit each sublayout
+    * ([[DirCommit]]) through its consolidation with ONE file per
+    * partition restored, then refresh the manifest counts. `layouts` and `counts` both take the
     * pre-compaction manifest (layout shapes may depend on frozen
     * params like the id column; counts evaluate AFTER the rewrites,
     * so Observation-riding counts are bound). Returns the manifest
@@ -138,9 +144,10 @@ object StagedIndex {
       overlap: Boolean = false)
       (layouts: IndexManifest => Seq[Layout])
       (counts: IndexManifest => Map[String, Long]): IndexManifest = {
-    val mf = IndexManifest.validateKind(spark, dir, kind)
+    val mf = IndexManifest.validate(spark, dir, kind, stranded = false)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def rewrite(l: Layout): Unit =
-      DirSwap.replace(spark, dir, l.name) { tmp =>
+      DirCommit.run(fs, new Path(dir, l.name)) { st =>
         // manifest-recorded schema when present: no inference job on
         // the rewrite's read (same discipline as the probe readers)
         val in = mf.layoutSchema(l.name) match {
@@ -151,16 +158,17 @@ object StagedIndex {
         l.partitionCol match {
           case Some(pc) => consolidated
             .repartition(col(pc)) // one file per partition
-            .write.mode("overwrite").partitionBy(pc).parquet(tmp)
-          case None => consolidated.write.mode("overwrite").parquet(tmp)
+            .write.mode("overwrite").partitionBy(pc).parquet(st.toString)
+          case None => consolidated.write.mode("overwrite").parquet(st.toString)
         }
+        DirCommit.Staged(())
       }
     // `overlap` runs the sublayout rewrites as concurrent actions
     // (guide §2.6: back-to-back driver-committed jobs leave task slots
     // idle in each other's tails). ONLY for kinds whose rewrites are
     // INDEPENDENT (band index bands∥ids, BM25 postings∥df∥dl): each
-    // DirSwap's tmp/aside state is namespaced by its layout name, so
-    // concurrent swaps never touch the same paths, and the crash
+    // commit's staging/aside is namespaced by its layout name, so
+    // concurrent commits never touch the same paths, and the crash
     // contract is unchanged — any subset of layouts swapped is the
     // same valid mixed-compaction state the sequential order could
     // leave. Kinds whose LATER layout consumes an Observation bound by

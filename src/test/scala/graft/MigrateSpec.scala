@@ -101,7 +101,7 @@ class MigrateSpec extends SparkSpec {
   }
 
   test("compareChunked over a mixed int/string/oid namespace equals the full diff") {
-    import graft.verify.Compare
+    import graft.verify.{Compare, CompareOracles}
     // a doc-store namespace whose _id mixes every BSON type class,
     // including int64 beyond 2^53 — lexicographic chunking would both
     // drop and double-count rows across chunk boundaries
@@ -133,7 +133,7 @@ class MigrateSpec extends SparkSpec {
 
     val cfg = MigratorConfig(command = "all", source = "s", target = "t",
       includes = Seq(graft.config.IncludeSpec("db.mixed")))
-    val full = Compare.summarize(source.read("db.mixed"), sink.read("db.mixed"), "id")
+    val full = CompareOracles.summarize(source.read("db.mixed"), sink.read("db.mixed"), "id")
     val chunked = Migrate.compareChunked(spark, cfg, source, sink, block = 50)
     assert(chunked("db.mixed") == full)
     assert(full.missingOnTarget == 5 && full.mismatched == 7 && full.extraOnTarget == 4)

@@ -161,32 +161,6 @@ class CatalogSpec extends SparkSpec {
     assert(!f.exists(st), "incomplete staging not discarded")
   }
 
-  for (point <- Seq("after-aside", "after-carry", "after-publish")) {
-    test(s"recover: crash $point rolls the commit forward (data AND marker)") {
-      val cat = new ParquetCatalog(spark, tmp(s"cat-$point"), "app", buckets = 8)
-      cat.merge(ns, orders.filter($"k" < 400), orders.limit(0).select("k").toDF(), "k",
-        marker = Some("batch" -> "1"))
-      cat.crashPoint = point
-      val ups = orders.filter($"k" < 400).withColumn("o_totalprice", $"o_totalprice" + 5)
-      intercept[IllegalStateException] {
-        cat.merge(ns, ups, orders.limit(0).select("k").toDF(), "k",
-          marker = Some("batch" -> "2"))
-      }
-      cat.crashPoint = ""
-      // a fresh catalog over the same dir (≈ restarted process) recovers:
-      // the staged batch was complete, so it must surface — marker AND data
-      val cat2 = new ParquetCatalog(spark, cat.dir, "app", buckets = 8)
-      assert(cat2.readMarker(ns, "batch").contains("2"), s"marker lost at $point")
-      // DECIMAL sum: double summation order differs between plans
-      val dec = sum(col("o_totalprice").cast("decimal(18,2)"))
-      assert(cat2.read(ns).agg(dec).head().getDecimal(0) ==
-        ups.agg(dec).head().getDecimal(0), s"data lost at $point")
-      val f = fs(cat2)
-      assert(!f.exists(new Path(cat2.dir, "orders.parquet.__old__")))
-      assert(!f.exists(new Path(cat2.dir, "orders.parquet.__staging__")))
-    }
-  }
-
   test("plain (unbucketed) table converts to bucketed layout on first bucketed merge") {
     val dir = tmp("cat-convert")
     val plain = new ParquetCatalog(spark, dir, "app")

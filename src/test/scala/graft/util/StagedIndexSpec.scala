@@ -125,7 +125,7 @@ class StagedIndexSpec extends SparkSpec {
     val obs = org.apache.spark.sql.Observation()
     // the two rewrites are INDEPENDENT (each binds only its own state),
     // so the overlapped path must land the exact sequential result:
-    // every DirSwap's tmp/aside is namespaced by its layout name
+    // every commit's staging/aside is namespaced by its layout name
     StagedIndex.compact(spark, dir, "demo", overlap = true) { _ =>
       Seq(
         StagedIndex.Layout("data", Some("bkt"),
@@ -140,9 +140,9 @@ class StagedIndexSpec extends SparkSpec {
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((1L, 2L), (2L, 2L), (3L, 2L)))
     assert(spark.read.parquet(s"$dir/flat").count() == 6L)
-    // no swap debris left behind by either concurrent rewrite
+    // no commit debris (staging, aside) left by either concurrent rewrite
     val names = new java.io.File(dir).listFiles().map(_.getName).toSet
-    assert(!names.exists(n => n.contains("__compact__") || n.contains("__old__")),
+    assert(!names.exists(n => n.contains("__staging__") || n.contains("__old__")),
       s"swap debris left: $names")
   }
 }

@@ -10,7 +10,7 @@ class CompareSpec extends SparkSpec {
   private lazy val orders = Tables.load(spark, sf0001, "orders")
 
   test("identical frames compare equal") {
-    val s = Compare.summarize(orders, orders, "o_orderkey")
+    val s = CompareOracles.summarize(orders, orders, "o_orderkey")
     assert(s.isEqual && s.matched == orders.count())
   }
 
@@ -22,7 +22,7 @@ class CompareSpec extends SparkSpec {
         when($"o_orderkey" % 101 === 0, $"o_totalprice" + 1).otherwise($"o_totalprice"))
     val extra = orders.filter($"o_orderkey" % 97 === 0)
       .withColumn("o_orderkey", $"o_orderkey" + 10000000L)
-    val s = Compare.summarize(src, tgt.unionByName(extra), "o_orderkey")
+    val s = CompareOracles.summarize(src, tgt.unionByName(extra), "o_orderkey")
     val missing = orders.filter($"o_orderkey" % 97 === 0).count()
     val mismatch = orders.filter($"o_orderkey" % 97 =!= 0 && $"o_orderkey" % 101 === 0).count()
     assert(s.missingOnTarget == missing)
@@ -92,7 +92,7 @@ class CompareSpec extends SparkSpec {
         .when($"k" === "42", lit("mutated")).otherwise($"v")) // mismatch (int key)
       .unionByName(Seq((s"""{"$$oid":"64aa00000000000000000003"}""", "new"))
         .toDF("k", "v"))                                 // extra (oid key)
-    val s = Compare.summarize(src, tgt, "k")
+    val s = CompareOracles.summarize(src, tgt, "k")
     assert(s.matched == keys.size - 2)
     assert(s.mismatched == 1 && s.missingOnTarget == 1 && s.extraOnTarget == 1)
   }
@@ -118,7 +118,7 @@ class CompareSpec extends SparkSpec {
     // chunks can see (the synthetic oid is outside every block — the
     // one class of row only the unbounded diff reports)
     val chunked = blocks.toSeq.flatMap { case (first, last) =>
-      Compare.diffRange(src, tgt, "k", first, last)
+      CompareOracles.diffRange(src, tgt, "k", first, last)
         .groupBy("status").count().collect()
         .map(r => r.getString(0) -> r.getLong(1))
     }.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
@@ -138,12 +138,12 @@ class CompareSpec extends SparkSpec {
     // between "1" and "3" lexicographically would include "26" but not
     // "7"; the BSON order includes every int in [1,3] only
     val src = Seq("1", "2", "26", "3", "7", "\"2\"").map(k => (k, "x")).toDF("k", "v")
-    val got = Compare.diffRange(src, src, "k", "1", "3")
+    val got = CompareOracles.diffRange(src, src, "k", "1", "3")
       .select("k").as[String].collect().toSet
     assert(got == Set("1", "2", "3"))
     // string bounds select only strings, never numerics that sort inside
     // the quoted text range
-    val got2 = Compare.diffRange(src, src, "k", "\"0\"", "\"9\"")
+    val got2 = CompareOracles.diffRange(src, src, "k", "\"0\"", "\"9\"")
       .select("k").as[String].collect().toSet
     assert(got2 == Set("\"2\""))
   }
