@@ -677,10 +677,7 @@ object Similarity {
     * pre-schema-param indexes. */
   private def readIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
       h: IvfPqHandle): DataFrame =
-    h.mf.layoutSchema("codes") match {
-      case Some(s) => spark.read.schema(s).parquet(h.codesPath)
-      case None => spark.read.parquet(h.codesPath)
-    }
+    graft.util.StagedIndex.readParquet(spark, h.mf.layoutSchema("codes"), h.codesPath)
 
   private def openIvfPq(spark: org.apache.spark.sql.SparkSession,
       dir: String): IvfPqHandle = {

@@ -90,8 +90,12 @@ trait Catalog {
   *
   * Every merge publishes through [[graft.util.DirCommit]]: the merged
   * data, the marker and the `_graft_count` file are staged, sealed and
-  * published together (untouched buckets carried by rename), and every
-  * read or merge first recovers an interrupted commit. A crash anywhere
+  * published together (untouched buckets carried by rename). A merge
+  * enters through the writer gate, which recovers any interrupted
+  * commit; [[read]], [[readMarker]] and [[dataExists]] pass the reader
+  * gate, which finishes a commit only on proof that it is not still
+  * being written, so a reader in another process (a `-compare` beside a
+  * running apply) never deletes a merge's staging. A crash anywhere
   * leaves the table either fully pre-merge (marker absent ⇒ the
   * micro-batch replays) or fully post-merge (marker present ⇒ the replay
   * is skipped): exactly-once either way. Single writer per table
@@ -112,7 +116,7 @@ final class ParquetCatalog(
     if (ns.contains('.')) ns.substring(ns.indexOf('.') + 1) else ns
 
   private def path(ns: String): Path = new Path(root, s"${table(ns)}.parquet")
-  private def recover(ns: String): Unit = DirCommit.recover(fs, path(ns))
+  private def settle(ns: String): Unit = DirCommit.settle(fs, path(ns))
 
   override def listNamespaces(): Seq[String] = {
     if (!fs.exists(root)) return Nil
@@ -126,8 +130,10 @@ final class ParquetCatalog(
 
   override def tablePath(ns: String): String = path(ns).toString
 
-  override def read(ns: String): DataFrame = {
-    recover(ns)
+  override def read(ns: String): DataFrame = { settle(ns); scan(ns) }
+
+  /** [[read]] without the reader gate, for a merge past its writer gate. */
+  private def scan(ns: String): DataFrame = {
     val df = spark.read.parquet(path(ns).toString)
     // a bucketed table surfaces its partition column; the read contract
     // is the logical schema
@@ -163,8 +169,8 @@ final class ParquetCatalog(
       key: String): Long = {
     val touched = upserts.select(col(key)).unionByName(deletes.select(col(key))).distinct()
     val merged =
-      if (!dataExists(ns)) upserts
-      else read(ns).join(touched, Seq(key), "left_anti")
+      if (!present(ns)) upserts
+      else scan(ns).join(touched, Seq(key), "left_anti")
         .unionByName(upserts, allowMissingColumns = true)
     val obs = Observation()
     merged.observe(obs, count(lit(1)).as("rows"))
@@ -180,7 +186,7 @@ final class ParquetCatalog(
       key: String): (Long, Option[Set[String]]) = {
     val p = path(ns)
     val bucketOf = pmod(xxhash64(col(key)), lit(buckets.toLong)).cast("int")
-    val exists = dataExists(ns)
+    val exists = present(ns)
     val bucketedLayout = exists && fs.listStatus(p)
       .exists(s => s.isDirectory && s.getPath.getName.startsWith(BucketCol + "="))
     val up = upserts.withColumn(BucketCol, bucketOf)
@@ -225,7 +231,7 @@ final class ParquetCatalog(
           // pre-merge total: maintained incrementally; a bucketed table
           // without the metadata file (external writer) pays one scan
           val oldTotal = DirCommit.readFile(fs, new Path(p, CountFile)).map(_.toLong)
-            .getOrElse(read(ns).count())
+            .getOrElse(scan(ns).count())
           oldTotal - oldTouched + newTouched
       }
       (total, touchedList)
@@ -233,7 +239,7 @@ final class ParquetCatalog(
   }
 
   override def readMarker(ns: String, name: String): Option[String] = {
-    recover(ns)
+    settle(ns)
     DirCommit.readFile(fs, new Path(path(ns), s"_graft_$name"))
   }
 
@@ -242,8 +248,9 @@ final class ParquetCatalog(
 
   override def drop(ns: String): Unit = DirCommit.drop(fs, path(ns))
 
-  override def dataExists(ns: String): Boolean = {
-    recover(ns)
+  override def dataExists(ns: String): Boolean = { settle(ns); present(ns) }
+
+  private def present(ns: String): Boolean = {
     val p = path(ns)
     fs.exists(p) && (fs.getFileStatus(p).isFile || fs.listStatus(p).nonEmpty)
   }

@@ -273,8 +273,8 @@ object DocStream {
     * silently meaningless. Census compaction is probe-invisible because
     * readers sum `n` and sum is associative (DocStreamSpec pins output
     * equality across cadences), and crash-safe ([[graft.util.DirCommit]]
-    * — the next probe's validate finishes or undoes an interrupted
-    * swap). */
+    * — the next probe's validate finishes a sealed swap or undoes one
+    * that left the census missing, the next compaction the rest). */
   def curateStreamAgainstIndex(docs: DataFrame, idCol: String,
       textName: String, timeCol: String, watermark: String,
       indexDir: String, outPath: String, checkpointDir: String,

@@ -628,41 +628,39 @@ object Dedup {
   private[graft] def bandIndexSeenIds(batchIds: DataFrame, dir: String,
       buckets: Long, broadcastCap: Long = AdmitBroadcastCap,
       idsSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val spark = batchIds.sparkSession
-    // ONE aggregate action yields the batch-id count AND the id bucket
-    // set (≤ `buckets` longs — bounded, driver-safe): the size probe
-    // (`limit(cap+1).count()`) and the bucket collect were two
-    // back-to-back driver round-trips on every append's guard — the
-    // last unfused instance of the exactNewStaged/bandIndexTexts
-    // one-aggregate pattern (batchIds is distinct per the contract
-    // above, so the count IS the distinct-id count the cap compares)
-    val head = batchIds.agg(count(lit(1)).as("__n"),
+      : DataFrame =
+    // id column ONLY: the guard's consumer collects whole rows, and
+    // without this projection a store-texts index would read its text
+    // payload (and the pre-compact null band/bsig columns) on every
+    // append's guard scan
+    prunedIds(batchIds, dir, buckets, broadcastCap, idsSchema, Nil).select(col("ref_id"))
+
+  /** The `ids/` rows of the ids in `refIds` (a distinct one-column
+    * (ref_id) frame, evaluated twice — pass it materialized): ONE
+    * aggregate action yields the id count AND the id bucket set
+    * (≤ `buckets` longs — bounded, driver-safe), the scan prunes
+    * STATICALLY to those buckets, and the semi-join back on the id
+    * broadcasts `refIds` while the count is within `broadcastCap`. The
+    * read is empty-tolerant ([[graft.util.StagedIndex.readLayout]]): a
+    * just-staged index whose corpus signed nothing has an EMPTY ids/
+    * dir that must read as "no ids", not die on schema inference; with
+    * data present the manifest-recorded `idsSchema` skips the inference
+    * job (the batch's id type matches through the join's implicit cast
+    * either way). `payload` names the empty schema's columns between
+    * ref_id and idb. */
+  private def prunedIds(refIds: DataFrame, dir: String, buckets: Long,
+      broadcastCap: Long, idsSchema: Option[org.apache.spark.sql.types.StructType],
+      payload: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val head = refIds.agg(count(lit(1)).as("__n"),
       collect_set(pmod(xxhash64(col("ref_id")), lit(buckets))).as("__qb"))
       .collect()(0)
     val small = broadcastCap > 0 && head.getLong(0) <= broadcastCap
     val qb = head.getSeq[Long](1).toArray
-    // empty-tolerant read (StagedIndex.readLayout): a just-staged index
-    // whose corpus signed nothing has an EMPTY ids/ dir that must read
-    // as "no ids seen", not die on schema inference; with data present
-    // the manifest-recorded staged schema (`idsSchema`, passed by
-    // callers holding the manifest) skips the per-append inference
-    // job — inference stays the fallback for pre-schema-param indexes
-    // (the batch's id type matches through the join's implicit cast
-    // either way)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      batchIds.schema("ref_id"),
-      org.apache.spark.sql.types.StructField("idb",
-        org.apache.spark.sql.types.LongType)))
-    graft.util.StagedIndex.readLayout(spark, s"$dir/ids", schema, idsSchema)
+    val empty = StructType(refIds.schema("ref_id") +: payload :+ StructField("idb", LongType))
+    graft.util.StagedIndex.readLayout(refIds.sparkSession, s"$dir/ids", empty, idsSchema)
       .filter(col("idb").isin(qb: _*))
-      .join(if (small) broadcast(batchIds) else batchIds,
-        Seq("ref_id"), "left_semi")
-      // id column ONLY: the guard's consumer collects whole rows, and
-      // without this projection a store-texts index would read its
-      // text payload (and the pre-compact null band/bsig columns) on
-      // every append's guard scan
-      .select(col("ref_id"))
+      .join(if (small) broadcast(refIds) else refIds, Seq("ref_id"), "left_semi")
   }
 
   /** Fold a batch of NEW documents into a [[stageBandIndex]] index —
@@ -719,17 +717,14 @@ object Dedup {
     * ([[stageBandIndex]] `storeTexts = true`) for the given candidate
     * ids — the Jaccard-verify text fetch that replaces a per-probe
     * corpus re-scan: the `ids/` sublayout (which carries the texts) is
-    * read with STATIC pruning to the candidates' id buckets (collected
-    * from `refIds` — ≤ `buckets` values) plus a semi-join back on the
-    * id, so the scan touches only the bucket partitions holding a
-    * candidate — candidate-proportional, never corpus-proportional
-    * (the [[bandIndexSeenIds]] pruning applied to text payloads; size
-    * `buckets` so one bucket ≈ a few GB at the target corpus, the
-    * family's standing knob). `refIds` is a one-column (ref_id) frame
-    * evaluated TWICE (the fused size+bucket aggregate, then the
-    * semi-join) — pass it materialized or derived narrowly from a materialized
-    * frame. Same adaptive broadcast as the guard. Refuses an index staged without texts — silently returning
-    * nothing would make every verification fail open. */
+    * read through [[prunedIds]], so the scan touches only the bucket
+    * partitions holding a candidate — candidate-proportional, never
+    * corpus-proportional (size `buckets` so one bucket ≈ a few GB at
+    * the target corpus, the family's standing knob). `refIds` is a
+    * one-column (ref_id) frame evaluated TWICE — pass it materialized or
+    * derived narrowly from a materialized frame. Refuses an index
+    * staged without texts — silently returning nothing would make every
+    * verification fail open. */
   def bandIndexTexts(refIds: DataFrame, dir: String,
       broadcastCap: Long = AdmitBroadcastCap): DataFrame = {
     val spark = refIds.sparkSession
@@ -741,27 +736,10 @@ object Dedup {
         "index; restage with storeTexts=true (or pass the corpus texts " +
         "explicitly where the caller supports it).")
     requireBandIds(spark, dir)
-    val buckets = mf.paramInt("buckets").toLong
-    // ONE aggregate action yields the candidate-id count AND the id
-    // bucket set (≤ `buckets` longs) — the size probe and the bucket
-    // collect were two driver round-trips per micro-batch verify
-    val head = refIds.agg(count(lit(1)).as("__n"),
-      collect_set(pmod(xxhash64(col("ref_id")), lit(buckets))).as("__qb"))
-      .collect()(0)
-    val small = broadcastCap > 0 && head.getLong(0) <= broadcastCap
-    val qb = head.getSeq[Long](1).toArray
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      refIds.schema("ref_id"),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("idb",
-        org.apache.spark.sql.types.LongType)))
-    // manifest-recorded staged schema: no inference job per verify fetch
-    graft.util.StagedIndex.readLayout(spark, s"$dir/ids", schema,
-        mf.layoutSchema("ids"))
-      .filter(col("idb").isin(qb: _*))
-      .join(if (small) broadcast(refIds) else refIds,
-        Seq("ref_id"), "left_semi")
+    prunedIds(refIds, dir, mf.paramInt("buckets").toLong, broadcastCap,
+        mf.layoutSchema("ids"),
+        Seq(org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
       .select(col("ref_id"), col("text"))
   }
 

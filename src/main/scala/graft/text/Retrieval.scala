@@ -252,10 +252,8 @@ object Retrieval {
     // manifest-recorded layout schemas (schema.<name> params, stageBm25)
     // replace per-probe parquet schema-inference jobs; an index staged
     // before the params existed falls back to inference as always
-    def readLayout(name: String) = mf.layoutSchema(name) match {
-      case Some(s) => spark.read.schema(s).parquet(s"$dir/$name")
-      case None => spark.read.parquet(s"$dir/$name")
-    }
+    def readLayout(name: String) =
+      graft.util.StagedIndex.readParquet(spark, mf.layoutSchema(name), s"$dir/$name")
     val qterms = queries.select(col(queryIdCol),
         explode(TextFunctions.whitespaceTokens(lower(queryText))).as("term"))
       .distinct()
@@ -332,10 +330,8 @@ object Retrieval {
       if (!assumeNewIds) {
         // manifest-recorded dl schema: the per-append guard scan pays
         // no schema-inference job (inference fallback for old indexes)
-        val dlGuard = mf.layoutSchema("dl") match {
-          case Some(s) => spark.read.schema(s).parquet(s"$dir/dl")
-          case None => spark.read.parquet(s"$dir/dl")
-        }
+        val dlGuard =
+          graft.util.StagedIndex.readParquet(spark, mf.layoutSchema("dl"), s"$dir/dl")
         graft.util.StagedIndex.requireNewIds(
           dlGuard.select(col(idCol))
             .join(tf.select(col(idCol)).distinct(), Seq(idCol), "left_semi"),
@@ -368,7 +364,8 @@ object Retrieval {
     * is QUERY-INVISIBLE (queries already sum df and derive stats from
     * dl), the manifest stays valid throughout, and each sublayout swap
     * is crash-safe ([[graft.util.DirCommit]] — the next probe's
-    * validate finishes or undoes it; a crash between sublayout swaps
+    * validate finishes a sealed swap or undoes one that left a layout
+    * missing, the next compaction the rest; a crash between sublayout swaps
     * leaves a valid mixed-compaction index). */
   def compactBm25(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {

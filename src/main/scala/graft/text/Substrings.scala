@@ -622,9 +622,10 @@ object Substrings {
     * frame) refresh to the distinct-hash count, which appends leave
     * stale by design. Mode-agnostic: exact and anchored censuses share
     * the (h, n, bkt) layout. Each sublayout swap is one
-    * [[graft.util.DirCommit]], which the next probe's validate finishes
-    * or undoes after a crash; single writer per index, as with
-    * stage/append. */
+    * [[graft.util.DirCommit]]: after a crash the next probe's validate
+    * finishes a sealed swap or undoes one that left a layout missing,
+    * and the next compaction clears the rest; single writer per index,
+    * as with stage/append. */
   def compactCensus(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     import graft.util.StagedIndex.Layout
@@ -679,9 +680,9 @@ object Substrings {
     * commit, not a compact — the re-aggregated census and stats land
     * fully in their [[graft.util.DirCommit]] stagings under a
     * still-valid manifest (crash there: live index untouched, the
-    * unsealed stagings discarded on the next open), then the manifest
-    * is dropped, both commits publish, and the manifest is rewritten
-    * with the new count: every crash
+    * unsealed stagings discarded by the next commit or restage), then
+    * the manifest is dropped, both commits publish, and the manifest
+    * is rewritten with the new count: every crash
     * window inside the commit reads loudly as "not a graft index"
     * (recovery = restage from the corpus), never as a silently
     * mis-pruning index. Explicit-verb-only by design — the streaming
@@ -693,10 +694,8 @@ object Substrings {
     import org.apache.hadoop.fs.Path
     val mf = graft.util.IndexManifest.validate(spark, dir,
       graft.util.IndexManifest.KindGramCensus)
-    val old = mf.layoutSchema("census") match {
-      case Some(s) => spark.read.schema(s).parquet(s"$dir/census")
-      case None => spark.read.parquet(s"$dir/census")
-    }
+    val old = graft.util.StagedIndex.readParquet(spark, mf.layoutSchema("census"),
+      s"$dir/census")
     val newBuckets = censusBuckets(old.count().toDouble, perBucket, cap)
     if (newBuckets == mf.paramInt("buckets")) return newBuckets
     val fs = new Path(dir).getFileSystem(
@@ -723,14 +722,15 @@ object Substrings {
           .coalesce(1).write.mode("overwrite").parquet(st.toString)
       }
       // commit bracket: manifest dropped, both layouts committed,
-      // manifest rewritten with the new bucket count
-      graft.util.StagedIndex.stage(spark, dir,
-          graft.util.IndexManifest.KindGramCensus,
-          mf.params + ("buckets" -> newBuckets.toString)) {
-        census.commit()
-        stats.commit()
-        Map("n_docs" -> nDocs, "n_grams" -> nGrams)
-      }
+      // manifest rewritten with the new bucket count (not through
+      // StagedIndex.stage: its writer gate would re-enter the two
+      // commits held here)
+      graft.util.IndexManifest.invalidate(spark, dir)
+      census.commit()
+      stats.commit()
+      graft.util.IndexManifest.write(spark, dir, graft.util.IndexManifest.KindGramCensus,
+        mf.params + ("buckets" -> newBuckets.toString),
+        Map("n_docs" -> nDocs, "n_grams" -> nGrams))
     } finally { census.close(); stats.close() }
     newBuckets
   }
@@ -801,8 +801,7 @@ object Substrings {
       .distinct().collect().map(_.getLong(0))
     // explicit manifest-recorded schema when the handle carries one:
     // no parquet footer schema-inference job per probe (guide §6)
-    val ref = censusSchema.fold(spark.read)(s => spark.read.schema(s))
-      .parquet(s"$dir/census")
+    val ref = graft.util.StagedIndex.readParquet(spark, censusSchema, s"$dir/census")
       .filter(col("bkt").isin(qb: _*))
       .select(col("h"))
     val refHit = bc.select(col("h")).join(ref, Seq("h"), "left_semi")

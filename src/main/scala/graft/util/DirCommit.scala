@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.locks.ReentrantLock
 
 /** The engine's one directory commit: replace directory `live` with a
   * new version so that a crash at any instant leaves either the whole
@@ -30,22 +31,29 @@ import java.util.concurrent.atomic.AtomicInteger
   *  5. staging renames into place;
   *  6. the aside is dropped.
   *
-  * [[recover]] rolls an interrupted commit FORWARD when the sentinel is
-  * present (steps 3–6 resume idempotently) and BACK otherwise (staging
-  * discarded, the aside restored). Commits and catalog reads run it on
-  * entry; index probes recover only a commit stranded with live missing
-  * ([[recoverUnder]]), as other leftovers may be a running commit.
+  * One routine rolls an interrupted commit FORWARD when the sentinel
+  * is present (steps 3–6 resume idempotently) and BACK otherwise
+  * (staging discarded, the aside restored), behind two gates:
+  *  - the WRITER gate ([[begin]], [[recoverUnder]]) always recovers:
+  *    the directory's one writer is entering, so leftovers are debris;
+  *  - the READER gate ([[settle]], [[settleUnder]]) recovers only on
+  *    proof that no commit is still writing: a sealed staging, or live
+  *    missing beside its aside (a running commit gets there only once
+  *    sealed). An unsealed staging beside live may be a commit running
+  *    in another process, so readers never touch it. Steady state costs
+  *    a reader two `exists` calls.
   *
-  * In-JVM coordination: one lock per qualified `live` serializes
-  * recovery with a commit's entry, and the in-flight set keeps every
-  * reader's recovery off a running commit, whose unsealed staging
-  * would otherwise look like crash debris. The long staging write runs
-  * outside the lock. Concurrent writers from different processes stay
-  * unsupported (one writer per directory, as in the reference); readers
-  * there treat a failure during a commit as retryable, and a staging
-  * deleted under a commit fails its seal instead of being published.
-  * On S3A rename copies, and deployments there swap in a table format
-  * behind the same callers.
+  * In-JVM coordination: one lock per qualified `live`, held from
+  * [[begin]] to [[Pending.close]]. A commit from another thread waits
+  * for it; re-entry on the same thread is refused. A reader whose gate
+  * fires waits for it too (a running commit's seal→publish window),
+  * then re-checks. Concurrent writers from different processes stay
+  * unsupported (one writer per directory, as in the reference); a
+  * reader there that rolls a commit forward while its writer publishes
+  * makes one of them fail a rename, which callers treat as retryable,
+  * and a staging deleted under a commit fails its seal instead of being
+  * published. On S3A rename copies, and deployments there swap in a
+  * table format behind the same callers.
   */
 object DirCommit {
   val Sentinel = "_graft_commit"
@@ -64,7 +72,7 @@ object DirCommit {
       rewritten: Option[Set[String]] = None)
 
   /** One whole commit of `live`: [[begin]], the staging write, seal and
-    * publish, then release the in-flight mark. */
+    * publish, then release the lock. */
   def run[A](fs: FileSystem, live: Path)(write: Path => Staged[A]): A = {
     val c = begin(fs, live)
     try {
@@ -74,20 +82,11 @@ object DirCommit {
     } finally c.close()
   }
 
-  /** Enter a commit of `live`: under its lock, recover leftovers and
-    * mark the commit in flight. The returned handle writes, commits and
-    * must be closed. */
-  def begin(fs: FileSystem, live: Path): Pending = {
-    val key = keyOf(fs, live)
-    lockFor(key).synchronized {
-      require(!inFlight.contains(key), s"another commit of $live is in flight")
-      recoverLocked(fs, live)
-      inFlight.add(key): Unit
-    }
-    new Pending(fs, live, key)
-  }
+  /** Enter a commit of `live` through the writer gate. The returned
+    * handle writes, commits and must be closed on the same thread. */
+  def begin(fs: FileSystem, live: Path): Pending = new Pending(fs, live, enter(fs, live))
 
-  final class Pending private[DirCommit] (fs: FileSystem, live: Path, key: String)
+  final class Pending private[DirCommit] (fs: FileSystem, live: Path, lock: ReentrantLock)
       extends AutoCloseable {
     val staging: Path = stagingOf(live)
 
@@ -109,34 +108,35 @@ object DirCommit {
       publish(fs, live, rewritten)
     }
 
-    def close(): Unit = inFlight.remove(key): Unit
+    def close(): Unit = lock.unlock()
   }
 
-  /** Finish or undo an interrupted commit of `live`; a no-op while a
-    * commit of it is in flight in this JVM. */
-  def recover(fs: FileSystem, live: Path): Unit = recoverIf(fs, live)(true)
+  /** The writer gate over every child of `root` with commit leftovers
+    * (one listing), for a restage that owns the whole index. */
+  def recoverUnder(fs: FileSystem, root: Path): Unit =
+    leftoversUnder(fs, root).foreach(enter(fs, _).unlock())
 
-  /** [[recover]] every child of `root` that has commit leftovers (one
-    * listing). `strandedOnly`, for readers: only children whose live dir
-    * is missing beside the aside (stopped between steps 3 and 5, which a
-    * running commit reaches only once sealed), so no staging another
-    * process is still writing is deleted; the rest wait for [[begin]]. */
-  def recoverUnder(fs: FileSystem, root: Path, strandedOnly: Boolean = false): Unit = {
-    val leftovers = if (strandedOnly) Seq(AsideSuffix) else Seq(StagingSuffix, AsideSuffix)
-    fs.listStatus(root).map(_.getPath.getName)
-      .flatMap(n => leftovers.find(n.endsWith).map(n.stripSuffix)).distinct
-      .foreach { n =>
-        val live = new Path(root, n)
-        recoverIf(fs, live)(!strandedOnly || !fs.exists(live))
-      }
-  }
-
-  private def recoverIf(fs: FileSystem, live: Path)(needed: => Boolean): Unit = {
-    val key = keyOf(fs, live)
-    if (!inFlight.contains(key)) lockFor(key).synchronized {
-      if (!inFlight.contains(key) && needed) recoverLocked(fs, live)
+  /** The reader gate: finish or undo an interrupted commit of `live`
+    * only on proof that no commit is still writing it (class doc). */
+  def settle(fs: FileSystem, live: Path): Unit =
+    if (proven(fs, live)) {
+      val lock = lockFor(fs, live); lock.lock()
+      try if (proven(fs, live)) recoverLocked(fs, live) finally lock.unlock()
     }
-  }
+
+  /** [[settle]] every child of `root` with commit leftovers (one
+    * listing; no further call in steady state). */
+  def settleUnder(fs: FileSystem, root: Path): Unit =
+    leftoversUnder(fs, root).foreach(settle(fs, _))
+
+  private def proven(fs: FileSystem, live: Path): Boolean =
+    fs.exists(new Path(stagingOf(live), Sentinel)) ||
+      (fs.exists(asideOf(live)) && !fs.exists(live))
+
+  private def leftoversUnder(fs: FileSystem, root: Path): Seq[Path] =
+    fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .flatMap(n => Seq(StagingSuffix, AsideSuffix).find(n.endsWith).map(n.stripSuffix))
+      .distinct.map(new Path(root, _))
 
   /** Delete `live` with any commit leftovers. */
   def drop(fs: FileSystem, live: Path): Unit =
@@ -192,10 +192,20 @@ object DirCommit {
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =
     require(fs.rename(from, to), s"failed to rename $from to $to")
 
-  private val locks = new ConcurrentHashMap[String, Object]()
-  private val inFlight = ConcurrentHashMap.newKeySet[String]()
-  private def keyOf(fs: FileSystem, live: Path): String = fs.makeQualified(live).toString
-  private def lockFor(key: String): Object = locks.computeIfAbsent(key, _ => new Object)
+  private val locks = new ConcurrentHashMap[String, ReentrantLock]()
+  private def lockFor(fs: FileSystem, live: Path): ReentrantLock =
+    locks.computeIfAbsent(fs.makeQualified(live).toString, _ => new ReentrantLock())
+
+  /** The writer gate: lock `live` (re-entry on this thread would
+    * recover its own running commit, so it is refused), then recover.
+    * Returns the held lock. */
+  private def enter(fs: FileSystem, live: Path): ReentrantLock = {
+    val lock = lockFor(fs, live)
+    require(!lock.isHeldByCurrentThread, s"another commit of $live is in flight on this thread")
+    lock.lock()
+    try recoverLocked(fs, live) catch { case e: Throwable => lock.unlock(); throw e }
+    lock
+  }
 
   /** Fault injection for specs: counts the mutating filesystem steps of
     * every commit and recovery whose `live` lies under `root`, logging

@@ -159,19 +159,18 @@ object IndexManifest {
   /** Read + check kind and any expected params — every append, probe
     * and compaction calls this before touching the layout, so a
     * mismatched directory fails with WHAT is wrong, not a downstream
-    * schema error. With `stranded` it also finishes or undoes a
-    * [[DirCommit]] that died between its renames with a layout missing,
-    * so the probe that follows reads a complete layout (one root
-    * listing); compaction skips it, as its commits recover on entry. */
+    * schema error. It also passes the index root through
+    * [[DirCommit.settleUnder]] (one listing): a commit a crash left
+    * sealed, or with a layout missing, is finished or undone, so what
+    * follows reads a complete layout, while a staging that may be a
+    * compaction running in another process is left alone. */
   def validate(spark: SparkSession, dir: String, kind: String,
-      expect: Map[String, String] = Map.empty,
-      stranded: Boolean = true): IndexManifest = {
+      expect: Map[String, String] = Map.empty): IndexManifest = {
     val mf = read(spark, dir)
     require(mf.kind == kind,
       s"$dir is a '${mf.kind}' index, not '$kind'")
     val root = new Path(dir)
-    if (stranded) DirCommit.recoverUnder(
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, strandedOnly = true)
+    DirCommit.settleUnder(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
     val bad = expect.filter { case (k, v) => !mf.params.get(k).contains(v) }
     require(bad.isEmpty,
       s"$dir ($kind) params mismatch: expected " +

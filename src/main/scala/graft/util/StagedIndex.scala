@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions.col
   *    a manifest count refresh ([[compact]]); the old and new layouts
   *    are probe-identical, so the manifest stays valid throughout. A
   *    swap a crash interrupted is finished or undone by the next
-  *    [[IndexManifest.validate]] when it left a layout missing, and by
-  *    the next compaction's commit otherwise.
+  *    [[IndexManifest.validate]] when it was sealed or left a layout
+  *    missing, and by the next compaction's commit otherwise.
   */
 object StagedIndex {
 
@@ -47,8 +47,9 @@ object StagedIndex {
   def stage(spark: SparkSession, dir: String, kind: String,
       params: Map[String, String])(body: => Map[String, Long]): Unit = {
     IndexManifest.invalidate(spark, dir)
-    // settle interrupted commits first: a sealed staging left by an
-    // earlier compaction must not roll forward over this stage's layout
+    // the writer gate over every layout first: a sealed staging left by
+    // an earlier compaction must not roll forward over this stage's
+    // layout
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root)) DirCommit.recoverUnder(fs, root)
@@ -126,12 +127,17 @@ object StagedIndex {
         !n.startsWith("_") && !n.startsWith(".") &&
           (if (s.isDirectory) hasDataFile(s.getPath) else true)
       }
-    if (fs.exists(p) && hasDataFile(p)) dataSchema match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None => spark.read.parquet(path)
-    }
+    if (fs.exists(p) && hasDataFile(p)) readParquet(spark, dataSchema, path)
     else spark.read.schema(emptySchema).parquet(path)
   }
+
+  /** Read a staged layout with its manifest-recorded schema
+    * ([[IndexManifest.layoutSchema]]): no parquet footer
+    * schema-inference job, no listing. `None` (an index staged before
+    * the schema params existed) infers, the historical behavior. */
+  def readParquet(spark: SparkSession,
+      schema: Option[org.apache.spark.sql.types.StructType], path: String): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
 
   /** Compact bracket: validate (see class doc), commit each sublayout
     * ([[DirCommit]]) through its consolidation with ONE file per
@@ -144,17 +150,12 @@ object StagedIndex {
       overlap: Boolean = false)
       (layouts: IndexManifest => Seq[Layout])
       (counts: IndexManifest => Map[String, Long]): IndexManifest = {
-    val mf = IndexManifest.validate(spark, dir, kind, stranded = false)
+    val mf = IndexManifest.validate(spark, dir, kind)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def rewrite(l: Layout): Unit =
       DirCommit.run(fs, new Path(dir, l.name)) { st =>
-        // manifest-recorded schema when present: no inference job on
-        // the rewrite's read (same discipline as the probe readers)
-        val in = mf.layoutSchema(l.name) match {
-          case Some(s) => spark.read.schema(s).parquet(s"$dir/${l.name}")
-          case None => spark.read.parquet(s"$dir/${l.name}")
-        }
-        val consolidated = l.consolidate(in)
+        val consolidated =
+          l.consolidate(readParquet(spark, mf.layoutSchema(l.name), s"$dir/${l.name}"))
         l.partitionCol match {
           case Some(pc) => consolidated
             .repartition(col(pc)) // one file per partition

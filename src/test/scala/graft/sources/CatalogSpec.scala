@@ -140,25 +140,38 @@ class CatalogSpec extends SparkSpec {
     assert(mergeResult.get.isSuccess,
       s"merge killed by a concurrent reader: ${mergeResult.get}")
     assert(writer.read(ns).count() == 200) // 100 updated in place
-    // and genuine leftovers still recover: a fresh staging dir with no
-    // live merge is discarded on next read
+    // a staging dir with no merge running here survives the read (it
+    // may be a merge in another process) and the next merge clears it
     val f = fs(writer)
     val st = new Path(writer.dir, "orders.parquet.__staging__")
     f.mkdirs(st)
     assert(reader.read(ns).count() == 200)
-    assert(!f.exists(st), "stale staging not discarded after the merge ended")
+    assert(f.exists(st), "a reader discarded a staging it cannot prove abandoned")
+    writer.upsert(ns, orders.limit(0), "k")
+    assert(!f.exists(st), "stale staging not discarded by the next merge")
   }
 
   test("recover: incomplete staging is discarded, live table intact") {
-    val cat = new ParquetCatalog(spark, tmp("cat-rb"), "app", buckets = 8)
-    cat.upsert(ns, orders.limit(100), "k")
+    // what a merge running in another process shows mid-write: readers
+    // there (a `-compare` beside a running apply) must leave it alone,
+    // and only the next merge (the writer gate) discards it
+    val dir = tmp("cat-rb")
+    val cat = new ParquetCatalog(spark, dir, "app", buckets = 8)
+    cat.merge(ns, orders.limit(100), orders.limit(0).select("k"), "k", Some("batch" -> "1"))
+    val reader = new ParquetCatalog(spark, dir, "app", buckets = 8)
     val f = fs(cat)
-    val st = new Path(cat.dir, "orders.parquet.__staging__")
-    f.mkdirs(st)
-    val out = f.create(new Path(st, "part-junk.parquet"), true)
+    val st = new Path(dir, "orders.parquet.__staging__")
+    val part = new Path(st, "graft_bucket=3/part-junk.parquet")
+    val out = f.create(part, true)
     out.write(Array[Byte](1, 2, 3)); out.close()
-    assert(cat.read(ns).count() == 100) // triggers recover
-    assert(!f.exists(st), "incomplete staging not discarded")
+    assert(reader.dataExists(ns))
+    assert(reader.readMarker(ns, "batch").contains("1"))
+    assert(reader.read(ns).count() == 100)
+    assert(f.exists(part), "a reader discarded an unsealed staging")
+    cat.merge(ns, orders.filter($"k" < 0), orders.limit(0).select("k"), "k", Some("batch" -> "2"))
+    assert(!f.exists(st), "incomplete staging not discarded by the next merge")
+    assert(reader.readMarker(ns, "batch").contains("2"))
+    assert(reader.read(ns).count() == 100)
   }
 
   test("plain (unbucketed) table converts to bucketed layout on first bucketed merge") {

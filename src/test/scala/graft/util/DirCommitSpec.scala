@@ -189,6 +189,57 @@ class DirCommitSpec extends SparkSpec {
     DirCommit.begin(fs, live).close() // released: a new commit may enter
   }
 
+  test("a second thread's commit of the same dir waits, then lands on top") {
+    val live = new Path(tmp("commit-wait"), "data")
+    def put(f: Path, v: String): Unit = {
+      val o = fs.create(f); try o.write(v.getBytes) finally o.close()
+    }
+    put(new Path(live, "part-0"), "v0")
+    val first = DirCommit.begin(fs, live)
+    @volatile var second: Option[scala.util.Try[Unit]] = None
+    val t = new Thread(() => second = Some(scala.util.Try(
+      DirCommit.run(fs, live) { st => put(new Path(st, "part-0"), "v2"); DirCommit.Staged(()) })))
+    try {
+      first.write(st => put(new Path(st, "part-0"), "v1"))
+      t.start()
+      val deadline = System.currentTimeMillis() + 10000
+      while (t.getState != Thread.State.WAITING && System.currentTimeMillis() < deadline)
+        Thread.sleep(5)
+      assert(t.getState == Thread.State.WAITING && second.isEmpty,
+        s"the second commit did not wait: ${t.getState} $second")
+      assert(fs.exists(first.staging), "the waiting commit touched the running one")
+      first.commit()
+    } finally first.close()
+    t.join()
+    assert(second.exists(_.isSuccess), s"the second commit failed: $second")
+    assert(DirCommit.readFile(fs, new Path(live, "part-0")).contains("v2"))
+    assert(debris(live.getParent.toString).isEmpty)
+  }
+
+  test("a probe rolls forward a sealed compaction staging beside live") {
+    val dir = tmp("commit-sealed")
+    Substrings.stageGramCensus(docs.filter($"doc_id" <= 3), "doc_id", col("text"),
+      k = 12, dir = dir, buckets = 2)
+    Substrings.appendGramCensus(docs.filter($"doc_id" > 3), "doc_id", col("text"), dir)
+    def spans() = Substrings.newDupSpans(docs, "doc_id", col("text"), dir)
+      .collect().map(_.toString).sorted.toSeq
+    val want = spans()
+    def files(bkt: Int): Int =
+      new java.io.File(s"$dir/census/bkt=$bkt").list().count(_.endsWith(".parquet"))
+    assert(files(0) > 1, "the append left one file per bucket")
+    // a compaction that died after sealing the census staging, before
+    // moving live aside: the commit is complete, so a reader finishes it
+    val counter = new DirCommit.Fault(dir, failAt = 3)
+    DirCommit.fault = Some(counter)
+    try intercept[IllegalStateException](Substrings.compactCensus(spark, dir))
+    finally DirCommit.fault = None
+    assert(counter.names.asScala.toSeq.take(3) == Seq("write", DirCommit.Sentinel, "aside"))
+    assert(Files.exists(Paths.get(dir, "census.__staging__", DirCommit.Sentinel)))
+    assert(spans() == want)
+    assert(debris(dir).isEmpty, s"the probe left ${debris(dir)}")
+    assert(files(0) == 1 && files(1) == 1, "the sealed compaction was not published")
+  }
+
   test("a stranded mid-swap state recovers at the probe to the pre-crash output") {
     val dir = tmp("commit-stranded")
     Substrings.stageGramCensus(docs, "doc_id", col("text"), k = 12, dir = dir, buckets = 2)
@@ -263,9 +314,9 @@ class DirCommitSpec extends SparkSpec {
     t.start()
     var sawStaging = false
     while (t.isAlive) {
-      // a probe's entry point: validate recovers a stranded commit,
-      // but must treat this live one, even between its renames, as in
-      // flight
+      // a probe's entry point: validate finishes a sealed or stranded
+      // commit, but must leave this running one, whose staging is
+      // unsealed while it writes, alone
       IndexManifest.validate(spark, dir, "demo")
       sawStaging ||= fs.exists(staging)
       Thread.sleep(20)

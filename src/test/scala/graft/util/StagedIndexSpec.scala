@@ -145,4 +145,44 @@ class StagedIndexSpec extends SparkSpec {
     assert(!names.exists(n => n.contains("__staging__") || n.contains("__old__")),
       s"swap debris left: $names")
   }
+
+  test("a probe of a schema-param index starts no parquet schema-inference job") {
+    import graft.text.{Retrieval, Substrings}
+    import org.apache.spark.graftbridge.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (2L, "a slow green turtle crawls under the old bridge by the river bank"),
+      (3L, "the quick brown fox jumps over the sleepy cat near the old mill"))
+      .toDF("doc_id", "text")
+    val census = tmp("stidx-schema-census")
+    Substrings.stageGramCensus(docs, "doc_id", col("text"), k = 12, dir = census, buckets = 2)
+    val bm25 = tmp("stidx-schema-bm25")
+    Retrieval.stageBm25(docs, "doc_id", col("text"), bm25, buckets = 2)
+    val sc = spark.sparkContext
+    /** Call sites of the stages `f` starts; inference is `parquet at …`. */
+    def inference(f: => Unit): Seq[String] = {
+      val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          e.stageInfos.foreach(st => sites.add(st.name))
+      }
+      ListenerBridge.drain(sc)
+      sc.addSparkListener(l)
+      try { f; ListenerBridge.drain(sc) } finally sc.removeSparkListener(l)
+      sites.asScala.toSeq.filter(_.startsWith("parquet at"))
+    }
+    // control: an inferring read of the same layout does start one
+    val control = inference(spark.read.parquet(s"$census/census"): Unit)
+    assert(control.nonEmpty, "an inferring read started no inference job")
+    assert(IndexManifest.read(spark, census).layoutSchema("census").isDefined)
+    val spans = inference(
+      Substrings.newDupSpans(docs, "doc_id", col("text"), census).collect(): Unit)
+    assert(spans.isEmpty, s"census probe inferred a schema: $spans")
+    val topK = inference(
+      Retrieval.stagedBm25TopK(spark, bm25, docs.withColumnRenamed("doc_id", "q_id"),
+        "q_id", col("text")).collect(): Unit)
+    assert(topK.isEmpty, s"bm25 probe inferred a schema: $topK")
+  }
 }
