@@ -701,37 +701,39 @@ object Substrings {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val census = graft.util.DirCommit.begin(fs, new Path(dir, "census"))
-    val stats = graft.util.DirCommit.begin(fs, new Path(dir, "stats"))
     try {
-      // full rewrites land in staging FIRST, under a still-valid
-      // manifest — the slow window is crash-free for the live index
-      val obs = org.apache.spark.sql.Observation()
-      census.write { st =>
-        old.groupBy(col("h")).agg(sum(col("n")).as("n"))
-          .observe(obs, count(lit(1)).as("n_grams"))
-          .withColumn("bkt", pmod(xxhash64(col("h")), lit(newBuckets.toLong)))
-          .repartition(col("bkt")) // one file per bucket
-          .write.mode("overwrite").partitionBy("bkt").parquet(st.toString)
-      }
-      val nGrams = obs.get("n_grams").asInstanceOf[Long]
-      val nDocs = mf.counts.getOrElse("n_docs", 0L)
-      import spark.implicits._
-      stats.write { st =>
-        Seq((mf.paramInt("k"), newBuckets.toLong, nGrams, nDocs))
-          .toDF("k", "buckets", "n_grams", "n_docs")
-          .coalesce(1).write.mode("overwrite").parquet(st.toString)
-      }
-      // commit bracket: manifest dropped, both layouts committed,
-      // manifest rewritten with the new bucket count (not through
-      // StagedIndex.stage: its writer gate would re-enter the two
-      // commits held here)
-      graft.util.IndexManifest.invalidate(spark, dir)
-      census.commit()
-      stats.commit()
-      graft.util.IndexManifest.write(spark, dir, graft.util.IndexManifest.KindGramCensus,
-        mf.params + ("buckets" -> newBuckets.toString),
-        Map("n_docs" -> nDocs, "n_grams" -> nGrams))
-    } finally { census.close(); stats.close() }
+      val stats = graft.util.DirCommit.begin(fs, new Path(dir, "stats"))
+      try {
+        // full rewrites land in staging FIRST, under a still-valid
+        // manifest — the slow window is crash-free for the live index
+        val obs = org.apache.spark.sql.Observation()
+        census.write { st =>
+          old.groupBy(col("h")).agg(sum(col("n")).as("n"))
+            .observe(obs, count(lit(1)).as("n_grams"))
+            .withColumn("bkt", pmod(xxhash64(col("h")), lit(newBuckets.toLong)))
+            .repartition(col("bkt")) // one file per bucket
+            .write.mode("overwrite").partitionBy("bkt").parquet(st.toString)
+        }
+        val nGrams = obs.get("n_grams").asInstanceOf[Long]
+        val nDocs = mf.counts.getOrElse("n_docs", 0L)
+        import spark.implicits._
+        stats.write { st =>
+          Seq((mf.paramInt("k"), newBuckets.toLong, nGrams, nDocs))
+            .toDF("k", "buckets", "n_grams", "n_docs")
+            .coalesce(1).write.mode("overwrite").parquet(st.toString)
+        }
+        // commit bracket: manifest dropped, both layouts committed,
+        // manifest rewritten with the new bucket count (not through
+        // StagedIndex.stage: its writer gate would re-enter the two
+        // commits held here)
+        graft.util.IndexManifest.invalidate(spark, dir)
+        census.commit()
+        stats.commit()
+        graft.util.IndexManifest.write(spark, dir, graft.util.IndexManifest.KindGramCensus,
+          mf.params + ("buckets" -> newBuckets.toString),
+          Map("n_docs" -> nDocs, "n_grams" -> nGrams))
+      } finally stats.close()
+    } finally census.close()
     newBuckets
   }
 

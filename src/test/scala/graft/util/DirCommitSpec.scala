@@ -189,6 +189,18 @@ class DirCommitSpec extends SparkSpec {
     DirCommit.begin(fs, live).close() // released: a new commit may enter
   }
 
+  test("a rebucket whose stats commit fails to enter releases the census commit") {
+    val dir = tmp("commit-rebucket-enter")
+    Substrings.stageGramCensus(docs, "doc_id", col("text"), k = 12, dir = dir, buckets = 2)
+    // debris the stats commit's entry recovery discards: fault that step
+    fs.mkdirs(DirCommit.stagingOf(new Path(dir, "stats")))
+    DirCommit.fault = Some(new DirCommit.Fault(dir, failAt = 1))
+    try intercept[IllegalStateException](
+      Substrings.rebucketCensus(spark, dir, perBucket = 1L, cap = 128))
+    finally DirCommit.fault = None
+    DirCommit.begin(fs, new Path(dir, "census")).close()
+  }
+
   test("a second thread's commit of the same dir waits, then lands on top") {
     val live = new Path(tmp("commit-wait"), "data")
     def put(f: Path, v: String): Unit = {
