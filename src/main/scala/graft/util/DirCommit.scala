@@ -1,8 +1,10 @@
 package graft.util
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import java.util.concurrent.locks.ReentrantLock
@@ -46,14 +48,15 @@ import java.util.concurrent.locks.ReentrantLock
   * In-JVM coordination: one lock per qualified `live`, held from
   * [[begin]] to [[Pending.close]]. A commit from another thread waits
   * for it; re-entry on the same thread is refused. A reader whose gate
-  * fires waits for it too (a running commit's seal→publish window),
-  * then re-checks. Concurrent writers from different processes stay
-  * unsupported (one writer per directory, as in the reference); a
-  * reader there that rolls a commit forward while its writer publishes
-  * makes one of them fail a rename, which callers treat as retryable,
-  * and a staging deleted under a commit fails its seal instead of being
-  * published. On S3A rename copies, and deployments there swap in a
-  * table format behind the same callers.
+  * fires waits for it too, then re-checks. Concurrent writers from
+  * different processes stay unsupported (one writer per directory, as
+  * in the reference), but a reader there may publish a commit beside
+  * its writer, so the publish (steps 3–6) is safe twice at once: live
+  * moves aside only while the staging waits, no rename nests, and a run
+  * that fails a step ends quietly if it finds the commit published.
+  * Neither run drops the other's version (at worst it waits aside for
+  * the next gate). A staging deleted under a commit fails its seal. On
+  * S3A rename copies; deployments there swap in a table format.
   */
 object DirCommit {
   val Sentinel = "_graft_commit"
@@ -75,11 +78,7 @@ object DirCommit {
     * publish, then release the lock. */
   def run[A](fs: FileSystem, live: Path)(write: Path => Staged[A]): A = {
     val c = begin(fs, live)
-    try {
-      val s = c.write(write)
-      c.commit(s.meta, s.rewritten)
-      s.result
-    } finally c.close()
+    try { val s = c.write(write); c.commit(s.meta, s.rewritten); s.result } finally c.close()
   }
 
   /** Enter a commit of `live` through the writer gate. The returned
@@ -105,7 +104,7 @@ object DirCommit {
       files.foreach { case (name, value) =>
         step(live, name)(writeFile(fs, new Path(staging, name), value))
       }
-      publish(fs, live, rewritten)
+      publish(fs, live)
     }
 
     def close(): Unit = lock.unlock()
@@ -143,11 +142,9 @@ object DirCommit {
     Seq(live, stagingOf(live), asideOf(live)).foreach(fs.delete(_, true))
 
   private[graft] def readFile(fs: FileSystem, f: Path): Option[String] =
-    if (!fs.exists(f)) None
-    else {
+    Option.when(fs.exists(f)) {
       val in = fs.open(f)
-      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
-      finally in.close()
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
     }
 
   private def writeFile(fs: FileSystem, f: Path, value: String): Unit = {
@@ -158,39 +155,48 @@ object DirCommit {
 
   private def recoverLocked(fs: FileSystem, live: Path): Unit = {
     val st = stagingOf(live); val aside = asideOf(live)
-    if (fs.exists(new Path(st, Sentinel))) {
-      // "*" is how older commits marked a whole-version staging
-      val rewritten = readFile(fs, new Path(st, RewrittenFile)).filter(_ != "*")
-        .map(_.split(',').filter(_.nonEmpty).toSet)
-      publish(fs, live, rewritten)
-    } else if (fs.exists(aside)) {
+    if (fs.exists(new Path(st, Sentinel))) publish(fs, live)
+    else if (fs.exists(aside)) {
       step(live, "discard staging")(fs.delete(st, true))
       if (fs.exists(live)) step(live, "drop aside")(fs.delete(aside, true))
       else step(live, "restore")(rename(fs, aside, live))
     } else if (fs.exists(st)) step(live, "discard staging")(fs.delete(st, true))
   }
 
-  /** Steps 3–6 for a sealed staging; resumable from any of them. */
-  private def publish(fs: FileSystem, live: Path, rewritten: Option[Set[String]]): Unit = {
+  /** Steps 3–6 for a sealed staging: resumable from any of them, and
+    * safe beside another process's run of the same publish (class doc). */
+  private def publish(fs: FileSystem, live: Path): Unit = {
     val st = stagingOf(live); val aside = asideOf(live)
-    if (fs.exists(live)) step(live, "aside")(rename(fs, live, aside))
-    for (r <- rewritten if fs.exists(aside)) {
-      // a rewritten partition is never carried, even when absent from
-      // staging: absence there means the write emptied it
-      val present = fs.listStatus(st).map(_.getPath.getName).toSet
-      fs.listStatus(aside).foreach { s =>
-        val name = s.getPath.getName
-        val eq = name.indexOf('=')
-        if (s.isDirectory && eq > 0 && !r(name.substring(eq + 1)) && !present(name))
-          step(live, s"carry $name")(rename(fs, s.getPath, new Path(st, name)))
+    try {
+      // "*" is how older commits marked a whole-version staging
+      val rewritten = readFile(fs, new Path(st, RewrittenFile)).filter(_ != "*")
+        .map(_.split(',').filter(_.nonEmpty).toSet)
+      // staging checked last: once it is gone, live is the new version
+      if (fs.exists(live) && fs.exists(st)) step(live, "aside")(rename(fs, live, aside))
+      for (r <- rewritten if fs.exists(aside)) {
+        // a rewritten partition is never carried, even when absent from
+        // staging: absence there means the write emptied it
+        val present = fs.listStatus(st).map(_.getPath.getName).toSet
+        fs.listStatus(aside).foreach { s =>
+          val name = s.getPath.getName
+          val eq = name.indexOf('=')
+          if (s.isDirectory && eq > 0 && !r(name.substring(eq + 1)) && !present(name))
+            step(live, s"carry $name")(rename(fs, s.getPath, new Path(st, name)))
+        }
       }
-    }
-    step(live, "publish")(rename(fs, st, live))
-    step(live, "drop aside")(fs.delete(aside, true)): Unit
+      step(live, "publish")(rename(fs, st, live))
+      step(live, "drop aside")(fs.delete(aside, true)): Unit
+    } catch { case _: IOException if !fs.exists(st) && fs.exists(live) => () } // published by the other
   }
 
+  /** A rename that fails when `to` exists, where `FileSystem.rename`
+    * moves `from` INTO it (HDFS, and the local copy fallback): rename(2)
+    * locally, which refuses a non-empty dir, and FileContext elsewhere. */
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =
-    require(fs.rename(from, to), s"failed to rename $from to $to")
+    if (fs.getUri.getScheme == "file") {
+      def local(p: Path) = Paths.get(fs.makeQualified(p).toUri)
+      Files.move(local(from), local(to), StandardCopyOption.ATOMIC_MOVE): Unit
+    } else FileContext.getFileContext(fs.getUri, fs.getConf).rename(from, to)
 
   private val locks = new ConcurrentHashMap[String, ReentrantLock]()
   private def lockFor(fs: FileSystem, live: Path): ReentrantLock =

@@ -267,6 +267,81 @@ class DirCommitSpec extends SparkSpec {
     assert(debris(dir).isEmpty)
   }
 
+  test("a reader's roll-forward racing its writer's publish loses no version") {
+    // a sealed commit of a partitioned dir: `k=0` rewritten, `k=1`
+    // carried. Its writer runs in another process and has already
+    // decided each step, so its moves (aside, then carry and publish,
+    // then drop aside) land between any two filesystem calls of a
+    // reader rolling the same commit forward. A writer step that fails
+    // ends that writer. The reader may fail when the writer's publish
+    // splits around one of its calls (the run that loses a rename
+    // fails), never when that publish lands whole between two of them.
+    // A reader that returns reads the new version, and whatever the
+    // interleaving, the next gate finds it
+    def put(f: Path, v: String): Unit = {
+      val p = Paths.get(f.toUri.getPath)
+      Files.createDirectories(p.getParent)
+      Files.write(p, v.getBytes): Unit
+    }
+    def arrange(live: Path): Unit = {
+      Seq("0", "1").foreach(k => put(new Path(live, s"k=$k/part-0"), s"old$k"))
+      val st = DirCommit.stagingOf(live)
+      put(new Path(st, "k=0/part-0"), "new0")
+      put(new Path(st, "_graft_touched"), "0")
+      put(new Path(st, DirCommit.Sentinel), "")
+    }
+    def read(live: Path) =
+      Seq("0", "1").map(k => DirCommit.readFile(fs, new Path(live, s"k=$k/part-0")))
+    final class Racing(at: Int => Unit) extends org.apache.hadoop.fs.FilterFileSystem(fs) {
+      var calls = 0
+      private def call[A](f: => A): A = { calls += 1; at(calls); f }
+      override def getFileStatus(p: Path) = call(super.getFileStatus(p))
+      override def listStatus(p: Path) = call(super.listStatus(p))
+      override def delete(p: Path, r: Boolean) = call(super.delete(p, r))
+      override def rename(a: Path, b: Path) = call(super.rename(a, b))
+      override def open(p: Path, n: Int) = call(super.open(p, n))
+    }
+    val counted = new Racing(_ => ())
+    val calm = new Path(tmp("commit-race-calm"), "data")
+    arrange(calm)
+    DirCommit.settle(counted, calm)
+    val want = Seq(Some("new0"), Some("old1"))
+    assert(read(calm) == want)
+    val points = counted.calls + 2
+    val root = tmp("commit-race")
+    var cases = 0
+    for (a <- 1 to points; b <- a to points; c <- b to points) {
+      val live = new Path(s"$root/$a-$b-$c", "data")
+      arrange(live)
+      val st = DirCommit.stagingOf(live); val aside = DirCommit.asideOf(live)
+      def move(from: Path, to: Path): Unit =
+        Files.move(Paths.get(from.toUri.getPath), Paths.get(to.toUri.getPath),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+      val writer = Seq[(Int, () => Unit)](
+        a -> (() => move(live, aside)),
+        b -> (() => move(new Path(aside, "k=1"), new Path(st, "k=1"))),
+        b -> (() => move(st, live)),
+        c -> (() => fs.delete(aside, true): Unit))
+      var next = 0
+      def play(at: Int): Unit =
+        while (next < writer.size && writer(next)._1 <= at) {
+          next = if (scala.util.Try(writer(next)._2()).isSuccess) next + 1 else writer.size
+        }
+      val where = s"writer steps at reader calls $a/$b/$c"
+      val reader = scala.util.Try(DirCommit.settle(new Racing(play), live))
+      assert(reader.isSuccess || a < b, s"$where failed the reader: $reader")
+      if (reader.isSuccess)
+        assert(read(live) == want, s"$where: the reader returned beside ${read(live)}")
+      play(points)
+      DirCommit.settle(fs, live)
+      assert(read(live) == want, s"$where lost a version: ${read(live)}")
+      DirCommit.begin(fs, live).close()
+      assert(debris(live.getParent.toString).isEmpty, s"$where left debris")
+      cases += 1
+    }
+    assert(cases > 100)
+  }
+
   test("a probe leaves a staging beside live to the next commit") {
     val dir = tmp("commit-foreign")
     Substrings.stageGramCensus(docs, "doc_id", col("text"), k = 12, dir = dir, buckets = 2)
